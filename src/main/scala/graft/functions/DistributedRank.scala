@@ -1,78 +1,128 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Distributed exact rank / prefix-sum machinery for windows whose
-  * PARTITION BY has too few values to parallelize (none at all, or a
-  * handful of priorities/segments/sources over a corpus-scale frame).
+import graft.Ckpt._
+
+/** Gated running sums for windows whose PARTITION BY has too few values
+  * to parallelize (none at all, or a handful of priorities/segments/
+  * sources over a corpus-scale frame).
   *
   * Spark plans such a window as one sort task per partition value — the
   * whole corpus (or 1/|values| of it) moves to a single task
   * ("WindowExec: No Partition Defined" / the q124-class; invisible at
-  * sf0.1, fatal at 100 TB). The equivalent distributed computation is
-  * the classic two-pass rank:
+  * sf0.1, fatal at 100 TB). Every query of that class states its window
+  * ONCE, over the `cum_<w>` / `total_<w>` columns of [[runningSums]],
+  * and the helper picks the physical form:
   *
-  *   1. bucket every row by a DETERMINISTIC, data-independent, monotone
-  *      function of its sort value ([[bucket]] — the IEEE-754
-  *      total-order bit prefix, ≤ 2¹⁶ buckets whose numeric order is
-  *      the value order; no RangePartitioner sampling job, no pinned-
-  *      partitioning ckpt);
-  *   2. one small aggregate (partition value, bucket) → row/weight
-  *      subtotals collects to the driver (≤ |parts|·2¹⁶ rows — the
-  *      bounded-literal contract) and prefix-sums into per-bucket rank
-  *      offsets;
-  *   3. ranks/prefix sums then need only a window PARTITIONED BY
-  *      (partition value, bucket) — thousands of concurrent partitions
-  *      — plus the broadcast offset.
+  *  - '''single task''' (frame within the gate): one window partitioned
+  *    by the partition columns — no publish, no collect, no extra job;
+  *  - '''distributed''' (past the gate): the classic two-pass rank —
+  *    1. bucket every row by a DETERMINISTIC, data-independent, monotone
+  *       function of its sort value ([[bucket]] — the IEEE-754
+  *       total-order bit prefix, ≤ 2¹⁶ buckets whose numeric order is
+  *       the value order; no RangePartitioner sampling job);
+  *    2. one small aggregate (partition, bucket) → weight subtotals
+  *       collects to the driver (≤ |parts|·2¹⁶ rows — the
+  *       bounded-literal contract) and prefix-sums into per-bucket
+  *       offsets plus per-partition totals;
+  *    3. running sums then need only a window PARTITIONED BY
+  *       (partition, bucket) — thousands of concurrent partitions —
+  *       plus the broadcast offset.
   *
-  * Worst-case realized buckets is 2¹⁶; worst-case bucket SKEW is a
-  * value-tie pathology (every row the same sort value), which is
-  * exactly the case the original window could not parallelize either.
+  * Worst-case bucket SKEW is a value-tie pathology (every row the same
+  * sort value), which is exactly the case the original window could
+  * not parallelize either.
   *
-  * THE GATE. Below [[GateConf]] input bytes (default 256 MB) the
-  * single-task window is strictly cheaper: one job, and a sort of
-  * ≤ a few million rows in one task is sub-second, while the
-  * distributed form pays 2-3 scheduled jobs plus a driver round-trip
-  * (~0.5-1 s of fixed latency at any scale). Past the threshold the
-  * single sort task IS the query's wall clock and grows without bound
-  * while the distributed form stays flat per core. This is a
-  * cost-based physical-plan choice, not a semantic one: both paths are
-  * oracle-pinned and produce identical rows (DistributedRankSpec runs
-  * every gated query both ways), and the threshold is a session conf
-  * so a cluster deployment can pin either path.
+  * THE GATE ([[fitsSingleTask]], the one reader of [[GateConf]]) prices
+  * the frame itself: the summed `stats.sizeInBytes` of the distinct leaf
+  * relations of its analyzed plan — for a parquet scan, the byte total
+  * its file index already listed. Within the gate (default 256 MB) the
+  * single-task window is strictly cheaper: a sort of ≤ a few million
+  * rows in one task is sub-second, while the distributed form pays 2-3
+  * scheduled jobs plus a driver round-trip (~0.5-1 s of fixed latency
+  * at any scale). Past it the single sort task IS the query's wall
+  * clock and grows without bound while the distributed form stays flat
+  * per core. Both forms produce identical rows (DistributedRankSpec
+  * pins every gated query at both gate settings), and the gate is a
+  * session conf so a deployment can pin either path.
   */
 object DistributedRank {
-  /** Session conf: max total input bytes (of the tables feeding the
-    * window) for which the single-task window form is used. The 256 MB
-    * default is sized from measurement, not the cluster: a ≤ 256 MB
-    * parquet slice is ≤ ~3M rows of the shapes involved, whose one-task
-    * sort costs well under a second — below the 2-3-job scheduling
-    * floor the distributed form pays at ANY scale. Set 0 to force the
-    * distributed path everywhere (plan dumps, scale tests).
+  /** Session conf: max priced bytes of a frame for which the single-task
+    * form is used. The 256 MB default is sized from measurement, not the
+    * cluster: a ≤ 256 MB parquet slice is ≤ ~3M rows of the shapes
+    * involved, whose one-task sort costs well under a second — below the
+    * 2-3-job scheduling floor the distributed form pays at ANY scale.
+    * Set 0 to force the distributed path everywhere (plan dumps, scale
+    * tests).
     */
   val GateConf = "spark.graft.singleTaskWindowMaxBytes"
   val DefaultGateBytes: Long = 256L << 20
 
-  /** Total on-disk bytes of `dir/<name>.parquet` — the same listing the
-    * scan's planning performs; used only to price the gate.
+  /** True iff `df` prices within the gate: the summed size estimate of
+    * the distinct leaf relations its analyzed plan reads (a relation
+    * read twice counts once).
     */
-  def inputBytes(spark: SparkSession, dir: String, names: String*): Long =
-    names.map { n =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$n.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0L
-      else {
-        val it = fs.listFiles(p, true)
-        var sum = 0L
-        while (it.hasNext) sum += it.next().getLen
-        sum
-      }
-    }.sum
+  def fitsSingleTask(df: DataFrame): Boolean = {
+    val bytes = PlanBridge.analyzed(df).collectLeaves()
+      .map(_.canonicalized).distinct.map(_.stats.sizeInBytes).sum
+    bytes <= df.sparkSession.conf.getOption(GateConf).map(BigInt(_))
+      .getOrElse(BigInt(DefaultGateBytes))
+  }
 
-  def fitsSingleTask(spark: SparkSession, dir: String, names: String*): Boolean =
-    inputBytes(spark, dir, names: _*) <=
-      spark.conf.getOption(GateConf).map(_.toLong).getOrElse(DefaultGateBytes)
+  /** `df` plus, per weight column `w`, the inclusive running sum
+    * `cum_<w>` over `order` within the partition (RANGE frame: order
+    * ties share one value) and the partition total `total_<w>`, both
+    * LONG. `bucketOn` must be non-null and non-decreasing along `order`
+    * (its leading key, or that key negated for a descending order) so
+    * order ties never split across buckets. Weights are integers; a
+    * null weight counts as 0. Within the gate this is one window; past
+    * it, the bucket-offset form described on the object.
+    */
+  def runningSums(df: DataFrame, parts: Seq[String], order: Seq[Column],
+      bucketOn: Column, weights: String*): DataFrame = {
+    def w(c: String): Column = sum(coalesce(col(c).cast("long"), lit(0L)))
+    if (fitsSingleTask(df)) {
+      val run = Window.partitionBy(parts.map(col): _*).orderBy(order: _*)
+      val all = run.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      df.select(col("*") +: weights.flatMap(c =>
+        Seq(w(c).over(run).as(s"cum_$c"), w(c).over(all).as(s"total_$c"))): _*)
+    } else {
+      val bucketed = df.withColumn("__bkt", bucket(bucketOn))
+        .ckpt() // two consumers: the offsets collect and the in-bucket pass
+      val keys = parts :+ "__bkt"
+      val offsets = bucketOffsets(bucketed.groupBy(keys.map(col): _*)
+        .agg(w(weights.head), weights.tail.map(w): _*))
+      val off = offsets.toDF(offsets.columns.map("__o" + _): _*)
+      val inBucket = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      val joined = bucketed.join(broadcast(off),
+        keys.map(k => bucketed(k) <=> off("__o" + k)).reduce(_ && _))
+      joined.select(df.columns.map(col) ++
+        weights.zipWithIndex.flatMap { case (c, i) =>
+          Seq((w(c).over(inBucket) + col(s"__o__off$i")).as(s"cum_$c"),
+            col(s"__o__tot$i").as(s"total_$c"))
+        }: _*)
+    }
+  }
+
+  /** End rank R_b of ntile bucket `b` of `k` over `n` rows: every bucket
+    * holds n div k rows and the first n % k one more, so
+    * R_b = b·(n div k) + min(b, n % k) (R_0 = 0, R_k = n). A row of rank
+    * r lands in ntile bucket 1 + |{b < k : R_b < r}|.
+    */
+  def ntileEnd(n: Column, k: Int, b: Column): Column =
+    b * call_function("div", n, lit(k.toLong)) + least(b, n % lit(k.toLong))
+
+  /** `ntile(k)` of the row at 1-based `rank` among `n` rows, as LONG
+    * column arithmetic: 1 + |{b < k : R_b < rank}|.
+    */
+  def ntile(rank: Column, n: Column, k: Int): Column =
+    (1 until k).foldLeft(lit(1L)) { (bin, b) =>
+      bin + when(ntileEnd(n, k, lit(b.toLong)) < rank, 1L).otherwise(0L) }
 
   /** Deterministic monotone bucket of a numeric sort value: the top 16
     * bits of the IEEE total-order key of the value as a double. The
@@ -91,62 +141,30 @@ object DistributedRank {
         .bitwiseXOR(lit(Long.MinValue)),
       48)
 
-  /** Collect per-(part, bucket) weights of `cells` (columns: part
-    * STRING, bkt LONG, w LONG) and return (offsets frame to broadcast-
-    * join back on (part, bkt), total weight per part). Offsets are the
-    * weight in SMALLER buckets of the same part — add the in-bucket
-    * prefix to get the global rank/prefix within the part.
+  /** Collect per-(parts…, bucket) weight subtotals — `cells` columns are
+    * the partition keys, `__bkt` LONG, then one LONG sum per weight — and
+    * return, per cell, the keys plus `__off<i>` (weight i in SMALLER
+    * buckets of the same partition) and `__tot<i>` (the partition's
+    * total weight i).
     */
-  def bucketOffsets(cells: DataFrame): (DataFrame, Map[String, Long]) = {
-    val spark = cells.sparkSession
-    val rows = cells.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val byPart = rows.groupBy(_._1)
-    val offRows = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val totals = byPart.map { case (part, cs) =>
-      var acc = 0L
-      cs.sortBy(_._2).foreach { case (_, b, w) =>
-        offRows += ((part, b, acc)); acc += w
+  private def bucketOffsets(cells: DataFrame): DataFrame = {
+    val nKeys = cells.columns.indexOf("__bkt")
+    val nW = cells.columns.length - nKeys - 1
+    val out = cells.collect().groupBy(r => (0 until nKeys).map(r.get)).values
+      .flatMap { cs =>
+        val acc = new Array[Long](nW)
+        val withOff = cs.sortBy(_.getLong(nKeys)).map { r =>
+          val off = acc.clone()
+          for (i <- 0 until nW) acc(i) += r.getLong(nKeys + 1 + i)
+          (r, off)
+        }
+        withOff.map { case (r, off) =>
+          Row.fromSeq((0 to nKeys).map(r.get) ++ off ++ acc) }
       }
-      part -> acc
-    }
-    import spark.implicits._
-    (broadcast(offRows.toSeq.toDF("__part", "__bkt", "__off")), totals)
-  }
-
-  /** Two-weight variant of [[bucketOffsets]]: cells carry (part STRING,
-    * bkt LONG, w1 LONG, w2 LONG); returns offsets (__off1, __off2) and
-    * per-part totals (t1, t2). One collect serves both running sums
-    * (q105's early/late KS counts).
-    */
-  def bucketOffsets2(cells: DataFrame): (DataFrame, Map[String, (Long, Long)]) = {
-    val spark = cells.sparkSession
-    val rows = cells.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val byPart = rows.groupBy(_._1)
-    val offRows =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
-    val totals = byPart.map { case (part, cs) =>
-      var a1 = 0L; var a2 = 0L
-      cs.sortBy(_._2).foreach { case (_, b, w1, w2) =>
-        offRows += ((part, b, a1, a2)); a1 += w1; a2 += w2
-      }
-      part -> ((a1, a2))
-    }
-    import spark.implicits._
-    (broadcast(offRows.toSeq.toDF("__part", "__bkt", "__off1", "__off2")),
-      totals)
-  }
-
-  /** ntile bucket-end ranks R_1..R_{k−1} for a part of n rows: bucket b
-    * has size n/k (+1 for b ≤ n mod k); R_b = Σ sizes of buckets 1..b.
-    * A row of global rank r is in ntile bucket 1 + |{b : R_b < r}|.
-    */
-  def ntileEnds(n: Long, k: Int): Seq[Long] = {
-    val base = n / k
-    val rem = (n % k).toInt
-    (1 until k).map(b =>
-      math.min(b, rem).toLong * (base + 1) +
-        math.max(b - rem, 0).toLong * base)
+    val longs = (p: String) => (0 until nW).map(i => StructField(s"$p$i", LongType))
+    val schema = StructType(cells.schema.fields.take(nKeys + 1) ++
+      longs("__off") ++ longs("__tot"))
+    cells.sparkSession.createDataFrame(
+      java.util.Arrays.asList(out.toSeq: _*), schema)
   }
 }

@@ -174,39 +174,16 @@ object CurationOps {
     import spark.implicits._
     import graft.functions.DistributedRank
     // the q124-class gate (see DistributedRank): the per-source prefix
-    // sum put 1/|sources| of the corpus in one task; past the gate the
-    // same exclusive prefix is bucket-local + a collected per-bucket
-    // token offset. The big path counts tokens with the length-translate
+    // sum is the exclusive running token count — the gated running sum
+    // minus the doc's own tokens. Tokens count with the length-translate
     // identity (== size(split(text, ' ')) for the single-space split:
     // separators+1 counts empty tokens exactly like split's keep-empty
-    // default) so neither pass materializes a token array. Both paths
-    // row-identical (DistributedRankSpec).
-    if (DistributedRank.fitsSingleTask(spark, dir, "documents")) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"source").orderBy($"doc_id")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      return Tables(spark, dir).documents
-        .withColumn("n_tokens", size(split($"text", " ")).cast("long"))
-        .withColumn("start_off", coalesce(sum($"n_tokens").over(w), lit(0L)))
-        .select($"source", $"doc_id", $"n_tokens", $"start_off",
-          expr(s"start_off div $PackWindow").as("window_start"),
-          expr(s"(start_off + n_tokens - 1) div $PackWindow").as("window_end"))
-        .withColumn("n_windows", $"window_end" - $"window_start" + 1L)
-        .orderBy($"source", $"doc_id")
-    }
+    // default), so no pass materializes a token array.
     val base = Tables(spark, dir).documents
       .select($"source", $"doc_id", TextOps.wordCount($"text").as("n_tokens"))
-      .withColumn("__bkt", DistributedRank.bucket($"doc_id"))
-    val (offDf, _) = DistributedRank.bucketOffsets(
-      base.groupBy($"source".as("__part"), $"__bkt")
-        .agg(sum($"n_tokens").as("w")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"source", $"__bkt").orderBy($"doc_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    base
-      .join(offDf.withColumnRenamed("__part", "source"), Seq("source", "__bkt"))
-      .withColumn("start_off",
-        coalesce(sum($"n_tokens").over(w), lit(0L)) + $"__off")
+    DistributedRank.runningSums(base, Seq("source"), Seq($"doc_id"),
+        $"doc_id", "n_tokens")
+      .withColumn("start_off", $"cum_n_tokens" - coalesce($"n_tokens", lit(0L)))
       .select($"source", $"doc_id", $"n_tokens", $"start_off",
         expr(s"start_off div $PackWindow").as("window_start"),
         expr(s"(start_off + n_tokens - 1) div $PackWindow").as("window_end"))
@@ -597,49 +574,22 @@ object CurationOps {
     * rather than fixed k.
     */
   def q107PercentileGate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     import graft.functions.DistributedRank
-    // the q124-class gate (see DistributedRank): the per-source rank
-    // window sorts 1/|sources| of the corpus in one task each; past the
-    // gate, ranks come from per-(source, bucket) offsets over the
-    // NEGATED quality (descending order; quality is finite — words ≥ 1
-    // by construction — so the negation is a clean order flip). The
-    // scored projection publishes once so the quality expression is
-    // evaluated a single time per row. Both paths row-identical
-    // (DistributedRankSpec).
-    if (DistributedRank.fitsSingleTask(spark, dir, "documents")) {
-      val byQuality = Window.partitionBy($"source")
-        .orderBy($"__q".desc, $"doc_id".asc)
-      val all = Window.partitionBy($"source")
-      return Tables(spark, dir).documents
-        .withColumn("__q", TextOps.qualityCol)
-        .withColumn("rank", row_number().over(byQuality))
-        .withColumn("n_source", count(lit(1)).over(all))
-        .filter($"rank" * 10 <= $"n_source" * 3)
-        // row_number is int32; the gate compares pandas dtypes, so emit
-        // the rank as int64 like the DuckDB twin's BIGINT
-        .select($"source", $"doc_id", $"rank".cast("long").as("rank"),
-          $"n_source", $"__q".as("quality"))
-        .orderBy($"source", $"doc_id")
-    }
+    // the q124-class gate (see DistributedRank): rank is the running row
+    // count in (quality desc, doc_id) order — a total order, so it IS
+    // row_number — and n_source the partition total. Past the gate the
+    // bucket is the NEGATED quality (descending order; quality is finite
+    // — words ≥ 1 by construction — so the negation is a clean order
+    // flip).
     val scored = Tables(spark, dir).documents
-      .select($"source", $"doc_id", TextOps.qualityCol.as("__q"))
-      .withColumn("__bkt", DistributedRank.bucket(-$"__q"))
-      .ckpt() // two consumers: the offsets collect and the rank pass
-    val (offDf, totals) = DistributedRank.bucketOffsets(
-      scored.groupBy($"source".as("__part"), $"__bkt")
-        .agg(count(lit(1)).as("w")))
-    val nDf = broadcast(totals.toSeq.toDF("source", "n_source"))
-    val w = Window.partitionBy($"source", $"__bkt")
-      .orderBy($"__q".desc, $"doc_id".asc)
-    scored
-      .join(offDf.withColumnRenamed("__part", "source"), Seq("source", "__bkt"))
-      .join(nDf, Seq("source"))
-      .withColumn("rank", row_number().over(w).cast("long") + $"__off")
-      .filter($"rank" * 10 <= $"n_source" * 3)
-      .select($"source", $"doc_id", $"rank", $"n_source",
-        $"__q".as("quality"))
+      .select($"source", $"doc_id", TextOps.qualityCol.as("quality"),
+        lit(1L).as("docs"))
+    DistributedRank.runningSums(scored, Seq("source"),
+        Seq($"quality".desc, $"doc_id".asc), -$"quality", "docs")
+      .filter($"cum_docs" * 10 <= $"total_docs" * 3)
+      .select($"source", $"doc_id", $"cum_docs".as("rank"),
+        $"total_docs".as("n_source"), $"quality")
       .orderBy($"source", $"doc_id")
   }
 
@@ -871,39 +821,20 @@ object CurationOps {
     * unrounded, bit-identical cross-engine.
     */
   def q150QuantileNormalize(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     import graft.functions.DistributedRank
+    // the q124-class gate (see DistributedRank): (n_chars, doc_id) is a
+    // total order, so percent_rank's rank IS the running row count and
+    // n the partition total
     val base = Tables(spark, dir).documents
-      .select($"doc_id", $"source", $"n_chars")
-    // the q124-class gate (see DistributedRank): the per-source window
-    // sorts 1/|sources| of the corpus in one task each; past the gate
-    // the same ranks come from per-(source, bucket) offsets — (n_chars,
-    // doc_id) is a total order, so percent_rank's rank IS row_number,
-    // and the distributed row_number is bucket-local + a collected
-    // offset. Both paths row-identical (DistributedRankSpec).
-    if (DistributedRank.fitsSingleTask(spark, dir, "documents")) {
-      val w = Window.partitionBy($"source").orderBy($"n_chars", $"doc_id")
-      return base
-        .withColumn("q", percent_rank().over(w))
-        .withColumn("decile", least(floor($"q" * 10), lit(9.0)).cast("long"))
-        .orderBy($"doc_id")
-    }
-    val (offDf, totals) = DistributedRank.bucketOffsets(
-      base.groupBy($"source".as("__part"),
-          DistributedRank.bucket($"n_chars").as("__bkt"))
-        .agg(count(lit(1)).as("w")))
-    val nDf = broadcast(totals.toSeq.toDF("source", "__n"))
-    val w = Window.partitionBy($"source", $"__bkt")
-      .orderBy($"n_chars", $"doc_id")
-    base.withColumn("__bkt", DistributedRank.bucket($"n_chars"))
-      .join(offDf.withColumnRenamed("__part", "source"), Seq("source", "__bkt"))
-      .join(nDf, Seq("source"))
-      .withColumn("__rn", row_number().over(w).cast("long") + $"__off")
+      .select($"doc_id", $"source", $"n_chars", lit(1L).as("docs"))
+    DistributedRank.runningSums(base, Seq("source"),
+        Seq($"n_chars", $"doc_id"), $"n_chars", "docs")
       // percent_rank = (rank−1)/(n−1), 0.0 for n = 1 — Spark's own
       // PercentRank branch, reproduced on the exact integers
-      .withColumn("q", when($"__n" > 1, ($"__rn" - 1).cast("double") /
-        ($"__n" - 1).cast("double")).otherwise(0.0))
+      .withColumn("q", when($"total_docs" > 1,
+        ($"cum_docs" - 1).cast("double") / ($"total_docs" - 1).cast("double"))
+        .otherwise(0.0))
       .withColumn("decile", least(floor($"q" * 10), lit(9.0)).cast("long"))
       .select($"doc_id", $"source", $"n_chars", $"q", $"decile")
       .orderBy($"doc_id")
@@ -1149,42 +1080,18 @@ object CurationOps {
     */
   def q187ExcisedPack(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     import graft.functions.DistributedRank
     val docs = Tables(spark, dir).documents
     val toks = docs.select($"doc_id", split($"text", " ").as("t"))
     val frags = DedupOps.exciseFragIntervals(toks)
     val withSrc = frags.join(docs.select($"doc_id", $"source"), Seq("doc_id"))
     // the q124-class gate (see DistributedRank): the per-source offset
-    // prefix sum put 1/|sources| of the fragment stream in one task;
-    // past the gate the interval frame (digests and endpoints only —
-    // text still never moves) publishes once and the prefix is
-    // bucket-local + a collected per-bucket token offset. A document's
-    // fragments share its doc_id bucket, so the (doc_id, start_pos)
-    // order is bucket-consistent. Both paths row-identical
-    // (DistributedRankSpec).
-    if (DistributedRank.fitsSingleTask(spark, dir, "documents")) {
-      val w = Window.partitionBy($"source").orderBy($"doc_id", $"start_pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      return withSrc
-        .withColumn("start_off", coalesce(sum($"frag_tokens").over(w), lit(0L)))
-        .select($"source", $"doc_id", $"start_pos", $"frag_tokens", $"start_off",
-          expr(s"start_off div $PackWindow").as("window_start"),
-          expr(s"(start_off + frag_tokens - 1) div $PackWindow").as("window_end"))
-        .orderBy($"source", $"doc_id", $"start_pos")
-    }
-    val base = withSrc.withColumn("__bkt", DistributedRank.bucket($"doc_id"))
-      .ckpt() // two consumers: the offsets collect and the prefix pass
-    val (offDf, _) = DistributedRank.bucketOffsets(
-      base.groupBy($"source".as("__part"), $"__bkt")
-        .agg(sum($"frag_tokens").as("w")))
-    val w = Window.partitionBy($"source", $"__bkt")
-      .orderBy($"doc_id", $"start_pos")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    base
-      .join(offDf.withColumnRenamed("__part", "source"), Seq("source", "__bkt"))
-      .withColumn("start_off",
-        coalesce(sum($"frag_tokens").over(w), lit(0L)) + $"__off")
+    // is the exclusive running token count. A document's fragments
+    // share its doc_id bucket, so the (doc_id, start_pos) order is
+    // bucket-consistent past the gate.
+    DistributedRank.runningSums(withSrc, Seq("source"),
+        Seq($"doc_id", $"start_pos"), $"doc_id", "frag_tokens")
+      .withColumn("start_off", $"cum_frag_tokens" - $"frag_tokens")
       .select($"source", $"doc_id", $"start_pos", $"frag_tokens", $"start_off",
         expr(s"start_off div $PackWindow").as("window_start"),
         expr(s"(start_off + frag_tokens - 1) div $PackWindow").as("window_end"))

@@ -1396,22 +1396,19 @@ object DedupOps {
     * are the existing one-shuffle machines; the eval itself joins two
     * pair lists and folds three counts — output is ONE row regardless
     * of corpus size.
+    *
+    * The truth/cand pair lists publish eagerly only when the documents
+    * frame is past the [[graft.functions.DistributedRank]] gate. Within
+    * it, Catalyst's ReuseExchange already shares the duplicated
+    * subplans and an eager publish only breaks stage pipelining
+    * (measured: 2.71→4.48 s at sf0.1); past it, each pair list is the
+    * product of the corpus-scale shingle/banding machinery and
+    * recomputing it for the second consumer costs a full extra pass.
     */
-  /** Session conf: minimum documents-fixture bytes past which q148
-    * eagerly publishes its truth/cand pair lists. Below it, Catalyst's
-    * ReuseExchange already shares the duplicated subplans and the eager
-    * materialization only breaks stage pipelining (measured r19:
-    * publish REGRESSED 2.71→4.48 s at sf0.1); past it, each pair list
-    * is the product of the corpus-scale shingle/banding machinery and
-    * recomputing it for the second consumer costs a full extra pass
-    * (r19 verdict order 5 — the sf0.1 verdict plausibly flips at sf10).
-    */
-  val EagerPublishConf = "spark.graft.eagerPublishMinBytes"
-
-  def q148LshEval(spark: SparkSession, dir: String): DataFrame =
-    lshEvalOf(Tables(spark, dir).documents,
-      publish = graft.functions.DistributedRank.inputBytes(spark, dir, "documents") >
-        spark.conf.getOption(EagerPublishConf).map(_.toLong).getOrElse(256L << 20))
+  def q148LshEval(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(spark, dir).documents
+    lshEvalOf(docs, publish = !graft.functions.DistributedRank.fitsSingleTask(docs))
+  }
 
   private[graft] def lshEvalOf(docs: DataFrame,
       publish: Boolean = false): DataFrame = {

@@ -400,7 +400,6 @@ object Profiling {
     * sums over the compacted distinct-value frame per type.
     */
   def q105KsDrift(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     import graft.functions.DistributedRank
     val ev = Tables(spark, dir).events
@@ -412,47 +411,22 @@ object Profiling {
       .agg(
         sum(when($"sec" < $"mid", 1L).otherwise(0L)).as("ca"),
         sum(when($"sec" >= $"mid", 1L).otherwise(0L)).as("cb"))
-    def report(cum: DataFrame): DataFrame = cum
+    // the q124-class gate (see DistributedRank): the running-sum window
+    // is partitioned by the handful of event types, but it runs over
+    // the per-(type, value) frame, whose size is the DISTINCT-VALUE
+    // count — corpus-scaled for a continuous measure. One gated call
+    // carries both (early, late) running counts and their totals.
+    DistributedRank.runningSums(cells, Seq("event_type"), Seq($"value"),
+        $"value", "ca", "cb")
       .groupBy($"event_type")
       .agg(
-        max($"n").as("n"), max($"m").as("m"),
-        max(abs($"cum_a" * $"m" - $"cum_b" * $"n")).as("ks_num"))
+        max($"total_ca").as("n"), max($"total_cb").as("m"),
+        max(abs($"cum_ca" * $"total_cb" - $"cum_cb" * $"total_ca")).as("ks_num"))
       .filter($"n" > 0 && $"m" > 0)
       .select($"event_type", $"n", $"m", $"ks_num",
         round($"ks_num".cast("double") / ($"n" * $"m").cast("double"), 6)
           .as("ks"))
       .orderBy($"event_type")
-    // the q124-class gate (see DistributedRank): the running-sum window
-    // is partitioned by the handful of event types, but it runs over
-    // the per-(type, value) frame, whose size is the DISTINCT-VALUE
-    // count — corpus-scaled for a continuous measure. Past the gate
-    // the same running sums are bucket-local + collected per-bucket
-    // (early, late) offsets; the per-type totals ride the same collect.
-    if (DistributedRank.fitsSingleTask(spark, dir, "events")) {
-      val byType = Window.partitionBy($"event_type")
-      val cum = Window.partitionBy($"event_type").orderBy($"value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return report(cells
-        .withColumn("cum_a", sum($"ca").over(cum))
-        .withColumn("cum_b", sum($"cb").over(cum))
-        .withColumn("n", sum($"ca").over(byType))
-        .withColumn("m", sum($"cb").over(byType)))
-    }
-    val bcells = cells.withColumn("__bkt", DistributedRank.bucket($"value"))
-      .ckpt() // two consumers: the offsets collect and the KS fold
-    val (offDf, totals) = DistributedRank.bucketOffsets2(
-      bcells.groupBy($"event_type".as("__part"), $"__bkt")
-        .agg(sum($"ca").as("w1"), sum($"cb").as("w2")))
-    val nmDf = broadcast(totals.toSeq.map { case (t, (n, m)) => (t, n, m) }
-      .toDF("event_type", "n", "m"))
-    val w = Window.partitionBy($"event_type", $"__bkt").orderBy($"value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    report(bcells
-      .join(offDf.withColumnRenamed("__part", "event_type"),
-        Seq("event_type", "__bkt"))
-      .withColumn("cum_a", sum($"ca").over(w) + $"__off1")
-      .withColumn("cum_b", sum($"cb").over(w) + $"__off2")
-      .join(nmDf, Seq("event_type")))
   }
 
   val q105Sql: String =
@@ -688,119 +662,35 @@ object Profiling {
     * interpolation on the bin boundary); rates are exact integer
     * ratios emitted as doubles.
     *
-    * r20 rewrite (guide §2.4 — remove the shuffle-to-one-task outright):
-    * the original `ntile(10) OVER (ORDER BY o_totalprice, o_orderkey)`
-    * was an UNPARTITIONED window — Spark plans it as a single-partition
-    * sort of the whole orders table (the "WindowExec: No Partition
-    * Defined" warning); invisible at sf0.1, fatal at 100 TB. The
-    * distributed form computes the same bins from boundary KEYS:
-    *
-    *   1. One partial+final aggregate by o_totalprice → per-price
-    *      (cnt, f_cnt): the only corpus-wide shuffle, and it carries
-    *      |distinct prices| rows, never |rows|.
-    *   2. Prices bucket by the deterministic monotone IEEE-bit prefix
-    *      ([[graft.functions.DistributedRank.bucket]] — data-
-    *      independent, so no RangePartitioner sampling pass and no
-    *      partitioning to pin); per-bucket subtotals collect to the
-    *      driver (≤ 2¹⁶ rows — the bounded-literal contract) and
-    *      prefix-sum into rank offsets, so each price's exact
-    *      cumulative count needs only a window PARTITIONED by bucket.
-    *   3. ntile boundary ranks R_b (b = 1..9) are arithmetic on N, so
-    *      binning is pure RANK arithmetic on literals: a price group
-    *      occupies ranks (cum−cnt, cum], bins whole when no R_b falls
-    *      inside (bin = 1 + |{b : R_b < cum}|), and the ≤9 straddling
-    *      groups broadcast their start rank back onto the base rows,
-    *      where each row's rank is start + its tie rank (row_number by
-    *      o_orderkey — the ntile ordering) and bins the same way. No
-    *      boundary keys are ever collected: the whole query is ONE
-    *      corpus aggregate + two bounded driver reads (the r20-v1 form
-    *      collected straddling groups and boundary rows too — two more
-    *      jobs, ~1.4 s of scheduling at sf0.1, same output).
-    *   4. A ≤(|groups| + straddle-rows)-row union reduces to the
-    *      10-row report.
-    *
-    * Below [[graft.functions.DistributedRank.GateConf]] input bytes the
-    * original single-window form runs instead (one job vs three — the
-    * distributed form's scheduling floor exceeds a trivially small sort
-    * task; see the gate rationale on DistributedRank). Both paths are
-    * row-identical and oracle-pinned (DistributedRankSpec).
-    *
-    * Row-identical to the ntile form (oracle q115Sql unchanged; pinned
-    * by DistributedRankSpec's ntile-vs-boundary battery).
+    * Scale shape (guide §2.4 — remove the shuffle-to-one-task outright):
+    * `ntile(10) OVER (ORDER BY o_totalprice, o_orderkey)` is an
+    * UNPARTITIONED window — Spark plans it as a single-partition sort of
+    * the whole orders table (the "WindowExec: No Partition Defined"
+    * warning); invisible at sf0.1, fatal at 100 TB. Here the rank is the
+    * gated running row count of
+    * [[graft.functions.DistributedRank.runningSums]] — that one window
+    * within the gate, price-bucket offsets past it — and the bin is
+    * ntile arithmetic on the rank and the row total
+    * ([[graft.functions.DistributedRank.ntile]]). Row-identical to the
+    * ntile form (oracle q115Sql; pinned by DistributedRankSpec at both
+    * gate settings).
     */
   def q115WoeBins(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     import graft.functions.DistributedRank
     val slim = Tables(spark, dir).orders
       .select($"o_orderkey", $"o_totalprice",
-        ($"o_orderstatus" === "F").cast("long").as("is_f"))
-    def report(binned: DataFrame): DataFrame = binned
+        ($"o_orderstatus" === "F").cast("long").as("is_f"), lit(1L).as("rows"))
+    DistributedRank.runningSums(slim, Nil, Seq($"o_totalprice", $"o_orderkey"),
+        $"o_totalprice", "rows")
+      .withColumn("bin", DistributedRank.ntile($"cum_rows", $"total_rows", 10))
       .groupBy($"bin")
-      .agg(sum($"cnt").as("n"), sum($"f_cnt").as("n_f"),
-        round(min($"lo"), 2).as("lo"), round(max($"hi"), 2).as("hi"))
+      .agg(count(lit(1)).as("n"), sum($"is_f").as("n_f"),
+        round(min($"o_totalprice"), 2).as("lo"),
+        round(max($"o_totalprice"), 2).as("hi"))
       .select($"bin", $"n", $"n_f",
         ($"n_f".cast("double") / $"n").as("f_rate"), $"lo", $"hi")
       .orderBy($"bin")
-    // the gate (DistributedRank scaladoc): one window job beats the
-    // distributed form's 3 scheduled jobs while the one sort task is
-    // trivially cheap; past the threshold that task IS the wall clock
-    if (DistributedRank.fitsSingleTask(spark, dir, "orders"))
-      return report(slim
-        .withColumn("bin", ntile(10)
-          .over(Window.orderBy($"o_totalprice", $"o_orderkey")).cast("long"))
-        .select($"bin", lit(1L).as("cnt"), $"is_f".as("f_cnt"),
-          $"o_totalprice".as("lo"), $"o_totalprice".as("hi")))
-    val perPrice = slim.groupBy($"o_totalprice")
-      .agg(count(lit(1)).as("cnt"), sum($"is_f").as("f_cnt"))
-      .withColumn("__bkt", DistributedRank.bucket($"o_totalprice"))
-      .ckpt() // three consumers below — materialize the aggregate once
-    val (offDf, totals) = DistributedRank.bucketOffsets(
-      perPrice.groupBy(lit("").as("__part"), $"__bkt")
-        .agg(sum($"cnt").as("w")))
-    val n = totals.getOrElse("", 0L)
-    if (n == 0)
-      // empty input: the report is empty under either form
-      return report(slim.select(lit(1L).as("bin"), lit(1L).as("cnt"),
-        $"is_f".as("f_cnt"), $"o_totalprice".as("lo"),
-        $"o_totalprice".as("hi")).filter(lit(false)))
-    // ntile: bucket b (1-based) of k=10 has size N/10 (+1 for b ≤ N%10);
-    // R_b = cumulative size of buckets 1..b = end rank of bucket b
-    val ends: Seq[Long] = DistributedRank.ntileEnds(n, 10)
-    val cum = perPrice.join(offDf.drop("__part"), Seq("__bkt"))
-      .withColumn("cum",
-        sum($"cnt").over(Window.partitionBy($"__bkt").orderBy($"o_totalprice"))
-          + $"__off")
-    // With the boundary RANKS R_b known as literals, binning is pure rank
-    // arithmetic — no boundary keys, hence no further driver round-trips
-    // (the v1 form collected the straddling groups AND their boundary
-    // rows: two extra jobs per invocation, ~1.5 s of pure scheduling at
-    // sf0.1). A group's rows occupy the rank interval (cum−cnt, cum]:
-    //   - a group with NO boundary inside that interval bins whole:
-    //     bin = 1 + #{b : R_b < cum} (constant over the interval);
-    //   - a group straddling ≥1 boundary joins its (cum−cnt) start rank
-    //     onto the base rows (≤9 groups → broadcast), where each row's
-    //     global rank is start + its tie rank (row_number by o_orderkey,
-    //     the ntile ordering), and bin = 1 + #{b : R_b < rank}.
-    def binOfRank(rank: Column): Column =
-      ends.foldLeft(lit(1L)) { (e, rb) =>
-        e + when(lit(rb) < rank, 1L).otherwise(0L) }
-    val isStraddle = ends
-      .map(rb => lit(rb) > $"cum" - $"cnt" && lit(rb) <= $"cum")
-      .reduce(_ || _)
-    val nonStraddle = cum.filter(!isStraddle)
-      .select(binOfRank($"cum").as("bin"), $"cnt", $"f_cnt",
-        $"o_totalprice".as("lo"), $"o_totalprice".as("hi"))
-    // ≤9 rows: the straddling groups' (price, start-rank) pairs
-    val straddleDf = cum.filter(isStraddle)
-      .select($"o_totalprice", ($"cum" - $"cnt").as("start_rank"))
-    val wTie = Window.partitionBy($"o_totalprice").orderBy($"o_orderkey")
-    val straddleRows = slim.join(broadcast(straddleDf), Seq("o_totalprice"))
-      .withColumn("rn", row_number().over(wTie).cast("long"))
-      .select(binOfRank($"start_rank" + $"rn").as("bin"),
-        lit(1L).as("cnt"), $"is_f".as("f_cnt"),
-        $"o_totalprice".as("lo"), $"o_totalprice".as("hi"))
-    report(nonStraddle.unionByName(straddleRows))
   }
 
   val q115Sql: String =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.Ckpt.GraftCheckpoint
 
 /** Relational operator surface (SURVEY.md §2.1–§2.6, §2.8).
   *
@@ -733,52 +732,20 @@ object Relational {
       .agg(sum(cents($"o_totalprice")).as("rev_cents"))
     val seg = Tables(spark, dir).customer
       .select($"c_custkey", $"c_mktsegment")
+    // the q115/q55 family: the 5-value PARTITION BY ntile would put 1/5
+    // of the customer base in one sort task each, so the decile comes
+    // from the gated running row count (descending revenue: past the
+    // gate, bucket the NEGATED value)
     val segd = perCust.join(seg, $"o_custkey" === $"c_custkey")
-    // the gate (q115/q55 family): the 5-value PARTITION BY ntile puts
-    // 1/5 of the customer base in one sort task each; past the gate the
-    // same 5-row report derives from per-(segment, revenue) counts —
-    // ties share a revenue value, so which tied customers land in tile 1
-    // never changes the summed cents, and the tile-1 sum is overlap
-    // arithmetic against the segment's decile-boundary rank R₁.
-    if (DistributedRank.fitsSingleTask(spark, dir, "customer")) {
-      val tiled = segd
-        .withColumn("tile", ntile(10).over(
-          Window.partitionBy($"c_mktsegment")
-            .orderBy($"rev_cents".desc, $"o_custkey")))
-      return tiled.groupBy($"c_mktsegment")
-        .agg(count(lit(1)).as("n_customers"),
-          sum($"rev_cents").as("total_cents"),
-          sum(when($"tile" === 1, $"rev_cents").otherwise(0L))
-            .as("top_decile_cents"))
-        .withColumn("top_decile_share",
-          $"top_decile_cents".cast("double") / $"total_cents")
-        .orderBy($"c_mktsegment")
-    }
-    val grouped = segd.groupBy($"c_mktsegment", $"rev_cents")
-      .agg(count(lit(1)).as("cnt"))
-      // descending revenue order: bucket the NEGATED value
-      .withColumn("__bkt", DistributedRank.bucket(-$"rev_cents"))
-      .ckpt() // two consumers: the offsets collect and the final pass
-    val (offDf, totals) = DistributedRank.bucketOffsets(
-      grouped.groupBy($"c_mktsegment".as("__part"), $"__bkt")
-        .agg(sum($"cnt").as("w")))
-    val r1Rows: Seq[(String, Long)] = totals.toSeq.map { case (s, np) =>
-      (s, DistributedRank.ntileEnds(np, 10).head)
-    }
-    val r1 = broadcast(r1Rows.toDF("c_mktsegment", "r1"))
-    grouped
-      .join(offDf.withColumnRenamed("__part", "c_mktsegment"),
-        Seq("c_mktsegment", "__bkt"))
-      .withColumn("cum",
-        sum($"cnt").over(Window.partitionBy($"c_mktsegment", $"__bkt")
-          .orderBy($"rev_cents".desc)) + $"__off")
-      .join(r1, Seq("c_mktsegment"))
-      .withColumn("top_cnt",
-        greatest(lit(0L), least($"cum", $"r1") - ($"cum" - $"cnt")))
+      .withColumn("custs", lit(1L))
+    DistributedRank.runningSums(segd, Seq("c_mktsegment"),
+        Seq($"rev_cents".desc, $"o_custkey"), -$"rev_cents", "custs")
+      .withColumn("tile", DistributedRank.ntile($"cum_custs", $"total_custs", 10))
       .groupBy($"c_mktsegment")
-      .agg(sum($"cnt").as("n_customers"),
-        sum($"rev_cents" * $"cnt").as("total_cents"),
-        sum($"rev_cents" * $"top_cnt").as("top_decile_cents"))
+      .agg(count(lit(1)).as("n_customers"),
+        sum($"rev_cents").as("total_cents"),
+        sum(when($"tile" === 1, $"rev_cents").otherwise(0L))
+          .as("top_decile_cents"))
       .withColumn("top_decile_share",
         $"top_decile_cents".cast("double") / $"total_cents")
       .orderBy($"c_mktsegment")
@@ -913,68 +880,25 @@ object Relational {
   /** ntile quartile bucketing per group — the stratification shape a
     * training pipeline uses to balance samples by a difficulty/size
     * score. ntile's deterministic tie handling needs a total order, so
-    * the window sorts by (price, orderkey).
+    * the rank runs over (price, orderkey).
     *
-    * r20 scale shape (guide §2.4, the q115/q124 family): the 5-value
-    * PARTITION BY put 1/5 of the orders table in one sort task each.
-    * Past the [[graft.functions.DistributedRank]] gate the same 20-row
-    * report is computed with NO corpus-scale window: the output needs
-    * only per-quartile counts and exact cent sums, both derivable from
-    * the per-(priority, price) count frame — within a tied price group
-    * the ntile order is o_orderkey, but every row carries the SAME
-    * price, so a boundary splitting the group moves counts, never which
-    * cents are summed. Boundary ranks are ntile arithmetic on the
-    * collected per-bucket subtotals; each group contributes
-    * overlap((cum−cnt, cum], (R_{q−1}, R_q]) rows and overlap·cents
-    * to quartile q — row-local arithmetic against a 20-row broadcast.
-    * Both paths row-identical (DistributedRankSpec) and oracle-pinned.
+    * Scale shape (the q115/q124 family): the 5-value PARTITION BY would
+    * put 1/5 of the orders table in one sort task each, so the rank is
+    * the gated running row count of
+    * [[graft.functions.DistributedRank.runningSums]] (one window within
+    * the gate, price-bucket offsets past it) and the quartile is ntile
+    * arithmetic on the rank and the partition total.
     */
   def q55Ntile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.DistributedRank
     val base = Tables(spark, dir).orders
-      .select($"o_orderpriority", $"o_totalprice")
-    if (DistributedRank.fitsSingleTask(spark, dir, "orders")) {
-      val w = Window.partitionBy($"o_orderpriority")
-        .orderBy($"o_totalprice", $"o_orderkey")
-      return Tables(spark, dir).orders
-        .select($"o_orderpriority", $"o_totalprice",
-          ntile(4).over(w).cast("long").as("quartile"))
-        .groupBy($"o_orderpriority", $"quartile")
-        .agg(count(lit(1)).as("n"), moneyAvg($"o_totalprice").as("avg_price"))
-        .orderBy($"o_orderpriority", $"quartile")
-    }
-    val grouped = base.groupBy($"o_orderpriority", $"o_totalprice")
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("__bkt", DistributedRank.bucket($"o_totalprice"))
-      .ckpt() // two consumers: the offsets collect and the final pass
-    val (offDf, totals) = DistributedRank.bucketOffsets(
-      grouped.groupBy($"o_orderpriority".as("__part"), $"__bkt")
-        .agg(sum($"cnt").as("w")))
-    // (priority, quartile, rank interval (r_lo, r_hi]) — ≤ 20 rows
-    val boundRows: Seq[(String, Long, Long, Long)] =
-      totals.toSeq.flatMap { case (p, np) =>
-        val all = 0L +: DistributedRank.ntileEnds(np, 4) :+ np
-        (1 to 4).map(q => (p, q.toLong, all(q - 1), all(q)))
-      }
-    val bounds = broadcast(
-      boundRows.toDF("o_orderpriority", "quartile", "r_lo", "r_hi"))
-    val cum = grouped
-      .join(offDf.withColumnRenamed("__part", "o_orderpriority"),
-        Seq("o_orderpriority", "__bkt"))
-      .withColumn("cum",
-        sum($"cnt").over(Window.partitionBy($"o_orderpriority", $"__bkt")
-          .orderBy($"o_totalprice")) + $"__off")
-    cum.join(bounds, Seq("o_orderpriority"))
-      .withColumn("overlap",
-        greatest(lit(0L), least($"cum", $"r_hi") -
-          greatest($"cum" - $"cnt", $"r_lo")))
-      .filter($"overlap" > 0)
+      .select($"o_orderpriority", $"o_totalprice", $"o_orderkey", lit(1L).as("rows"))
+    DistributedRank.runningSums(base, Seq("o_orderpriority"),
+        Seq($"o_totalprice", $"o_orderkey"), $"o_totalprice", "rows")
+      .withColumn("quartile", DistributedRank.ntile($"cum_rows", $"total_rows", 4))
       .groupBy($"o_orderpriority", $"quartile")
-      .agg(sum($"overlap").as("n"),
-        sum($"overlap" * cents($"o_totalprice")).as("sum_cents"))
-      .select($"o_orderpriority", $"quartile", $"n",
-        ($"sum_cents".cast("double") / 100.0 / $"n").as("avg_price"))
+      .agg(count(lit(1)).as("n"), moneyAvg($"o_totalprice").as("avg_price"))
       .orderBy($"o_orderpriority", $"quartile")
   }
 

@@ -2606,10 +2606,11 @@ object SimilarityOps {
     * carrier swaps to doubles, ranks by msd, and reports dist2_num
     * NULL.
     */
-  def q197EmbeddingTrust(spark: SparkSession, dir: String): DataFrame =
-    embeddingTrustOf(Tables(spark, dir).embeddings,
-      distributed = !graft.functions.DistributedRank
-        .fitsSingleTask(spark, dir, "embeddings"))
+  def q197EmbeddingTrust(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables(spark, dir).embeddings
+    embeddingTrustOf(emb,
+      distributed = !graft.functions.DistributedRank.fitsSingleTask(emb))
+  }
 
   private[graft] def embeddingTrustOf(emb: DataFrame,
       forceExactLane: Option[Boolean] = None,

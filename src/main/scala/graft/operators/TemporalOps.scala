@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -108,8 +108,9 @@ object TemporalOps {
     // VALUES per flag collect (bounded), and the driver replays
     // Percentile's own interpolation arithmetic on them
     // (row-identical: DistributedRankSpec pins both paths).
-    if (DistributedRank.fitsSingleTask(spark, dir, "lineitem"))
-      return Tables(spark, dir).lineitem
+    val lineitem = Tables(spark, dir).lineitem
+    if (DistributedRank.fitsSingleTask(lineitem))
+      return lineitem
         .groupBy($"l_returnflag")
         .agg(
           expr("percentile(l_extendedprice, array(0.5D, 0.9D, 0.99D))").as("ps"),
@@ -123,11 +124,11 @@ object TemporalOps {
           $"min_price", $"max_price")
         .orderBy($"l_returnflag")
     val ps = Seq(0.5, 0.9, 0.99)
-    val lookup = flagPriceIndex(spark, dir, n =>
+    val lookup = flagPriceIndex(lineitem, n =>
       ps.flatMap { p =>
         val pos = (n - 1) * p
-        Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
-      } ++ Seq(0L, n - 1))
+        Seq(floor(pos), ceil(pos))
+      } ++ Seq(lit(0L), n - 1))
     lookup.toSeq.map { case (f, (n, at)) =>
       (f, roundHalfUp(interpolate(n, 0.5, at), 4),
         roundHalfUp(interpolate(n, 0.9, at), 4),
@@ -139,43 +140,30 @@ object TemporalOps {
 
   /** Per-returnflag lookup of lineitem prices by GLOBAL sorted index,
     * distributed (the q115/q124 count-frame machinery): one
-    * per-(flag, price) aggregate + bucket offsets give every price
-    * group its exact rank interval; only the ≤ |wanted| straddling
-    * VALUES per flag ever collect. `idxOf(n)` names the 0-based sorted
-    * indexes a caller needs for a flag of n rows. Returns per flag:
-    * (n, index → value).
+    * per-(flag, price) aggregate + its gated running counts give every
+    * price group its exact rank interval; only the ≤ |wanted|
+    * straddling VALUES per flag ever collect. `idxOf(n)` names, as
+    * columns over the flag's row count n, the 0-based sorted indexes a
+    * caller needs. Returns per flag: (n, index → value).
     */
-  private def flagPriceIndex(spark: SparkSession, dir: String,
-      idxOf: Long => Seq[Long]): Map[String, (Long, Long => Double)] = {
-    import spark.implicits._
+  private def flagPriceIndex(lineitem: DataFrame,
+      idxOf: Column => Seq[Column]): Map[String, (Long, Long => Double)] = {
+    import lineitem.sparkSession.implicits._
     import graft.functions.DistributedRank
-    val grouped = Tables(spark, dir).lineitem
+    val grouped = lineitem
       .groupBy($"l_returnflag", $"l_extendedprice")
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("__bkt", DistributedRank.bucket($"l_extendedprice"))
-      .ckpt() // two consumers: the offsets collect and the value lookup
-    val (offDf, totals) = DistributedRank.bucketOffsets(
-      grouped.groupBy($"l_returnflag".as("__part"), $"__bkt")
-        .agg(sum($"cnt").as("w")))
-    if (totals.isEmpty) return Map.empty
-    val wanted: Map[String, Seq[Long]] =
-      totals.map { case (f, n) => f -> idxOf(n).distinct.sorted }
-    val cum = grouped
-      .join(offDf.withColumnRenamed("__part", "l_returnflag"),
-        Seq("l_returnflag", "__bkt"))
-      .withColumn("cum", sum($"cnt").over(
-        Window.partitionBy($"l_returnflag", $"__bkt")
-          .orderBy($"l_extendedprice")) + $"__off")
-    val cond = wanted.map { case (f, idxs) =>
-      $"l_returnflag" === lit(f) &&
-        idxs.map(i => $"cum" > i && $"cum" - $"cnt" <= i).reduce(_ || _)
-    }.reduce(_ || _)
-    val rows = cum.filter(cond)
-      .select($"l_returnflag", $"l_extendedprice", $"cnt", $"cum").collect()
-    totals.map { case (f, n) =>
-      val at: Long => Double = i => rows.find(r => r.getString(0) == f &&
+    val cum = DistributedRank.runningSums(grouped, Seq("l_returnflag"),
+      Seq($"l_extendedprice"), $"l_extendedprice", "cnt")
+    val rows = cum
+      .filter(idxOf($"total_cnt")
+        .map(i => $"cum_cnt" > i && $"cum_cnt" - $"cnt" <= i).reduce(_ || _))
+      .select($"l_returnflag", $"l_extendedprice", $"cnt", $"cum_cnt",
+        $"total_cnt").collect()
+    rows.groupBy(_.getString(0)).map { case (f, rs) =>
+      val at: Long => Double = i => rs.find(r =>
         r.getLong(3) - r.getLong(2) <= i && i < r.getLong(3)).get.getDouble(1)
-      f -> ((n, at))
+      f -> ((rs.head.getLong(4), at))
     }
   }
 
@@ -412,8 +400,9 @@ object TemporalOps {
     // the corpus per group — past the gate the exact leg moves to the
     // count-frame machinery and broadcast-joins its 3-row literals onto
     // the (still distributed, still sketch-bounded) approx aggregate.
-    if (DistributedRank.fitsSingleTask(spark, dir, "lineitem"))
-      return Tables(spark, dir).lineitem
+    val lineitem = Tables(spark, dir).lineitem
+    if (DistributedRank.fitsSingleTask(lineitem))
+      return lineitem
         .groupBy($"l_returnflag")
         .agg(
           percentile_approx($"l_extendedprice", lit(0.9), lit(1000)).as("approx"),
@@ -425,10 +414,10 @@ object TemporalOps {
             .as("approx_within_bounds"))
         .orderBy($"l_returnflag")
     val ps = Seq(0.89, 0.9, 0.91)
-    val lookup = flagPriceIndex(spark, dir, n =>
+    val lookup = flagPriceIndex(lineitem, n =>
       ps.flatMap { p =>
         val pos = (n - 1) * p
-        Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
+        Seq(floor(pos), ceil(pos))
       })
     val exDf = broadcast(lookup.toSeq.map { case (f, (n, at)) =>
       (f, roundHalfUp(interpolate(n, 0.9, at), 4),

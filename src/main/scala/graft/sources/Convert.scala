@@ -21,7 +21,6 @@ import org.apache.spark.sql.types.StructType
 object Convert {
 
   val TextFormats = Set("csv", "json")
-  val ColumnarFormats = Set("parquet", "orc")
 
   def read(spark: SparkSession, path: String, format: String,
       schema: Option[StructType] = None): DataFrame = {
