@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Driver-run benchmark: every registered query at the env-selected scale
   * factor, one JSON line to stdout. Reps are interleaved round-robin across
@@ -57,6 +57,26 @@ object Bench {
 
   private[graft] def jArr(xs: Seq[Double]): String =
     xs.map(x => f"$x%.2f").mkString("[", ",", "]")
+
+  /** The artifact's per-query count fields, keyed in `order`:
+    *   - `tasks`, completed tasks, max over reps (listener-bus counts can
+    *     lag a few events behind the action's return, so one rep may read
+    *     a task or two short). This is the scaling evidence: a query
+    *     floored at a handful of tasks cannot speed up with more cores;
+    *   - `codegen_compiles`, generated classes compiled during the LAST
+    *     rep. Once the JVM-wide codegen cache holds a query's classes this
+    *     is 0, so a nonzero entry names a query whose generated code
+    *     changes between runs.
+    * -1 marks a query with no completed rep.
+    */
+  private[graft] def countFields(order: Seq[String],
+      tasks: String => Seq[Long], compiles: String => Seq[Long]): String = {
+    def field(key: String, pick: String => Option[Long]): String =
+      order.map(k => "\"" + k + "\":" + pick(k).getOrElse(-1L))
+        .mkString("\"" + key + "\":{", ",", "}")
+    field("tasks", tasks(_).maxOption) + "," +
+      field("codegen_compiles", compiles(_).lastOption)
+  }
 
   /** 5-MIN loadavg above this before the run starts ⇒ ambient load is
     * already eating cores this process doesn't own (the bench itself has
@@ -250,14 +270,7 @@ object Bench {
       cooldown = true
       Thread.sleep(60000)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // ---- scaling-probe evidence (r19 verdict order 3, ADDITIVE) ----
     // The driver's c8/c32 heuristic flagged `suspect_cpus_ignored` because
@@ -311,6 +324,7 @@ object Bench {
     val wall = Array.fill(n)(collection.mutable.ArrayBuffer.empty[Double])
     val cpu = Array.fill(n)(collection.mutable.ArrayBuffer.empty[Double])
     val tasks = Array.fill(n)(collection.mutable.ArrayBuffer.empty[Long])
+    val compiles = Array.fill(n)(collection.mutable.ArrayBuffer.empty[Long])
     val errAt = Array.fill[Option[String]](n)(None)
     val passLoads = collection.mutable.ArrayBuffer.empty[Seq[Double]]
     for (_ <- 1 to reps) {
@@ -320,16 +334,15 @@ object Bench {
         // and exit nonzero after reporting (later passes skip it)
         spark.sparkContext.setJobDescription(name)
         val k0 = taskCounter.get()
+        val g0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val c0 = procCpuSec
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           wall(i) += (System.nanoTime() - t0) / 1e9
           cpu(i) += procCpuSec - c0
-          // listener-bus counts can lag a few events behind the action's
-          // return — the per-rep figures are diagnostic (±a task or two),
-          // the MAX across reps is reported
           tasks(i) += taskCounter.get() - k0
+          compiles(i) += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - g0
         } catch { case t: Throwable => errAt(i) = Some(t.toString) }
         // Release the query's published blocks OUTSIDE the timing window.
         // localCheckpoint persists at the RDD layer, which survives the
@@ -479,15 +492,9 @@ object Bench {
     val repWallsJson = results.sortBy(_._2)
       .map { case (k, _, _) => "\"" + k + "\":" + jArr(wall(idxOf(k)).toSeq) }
       .mkString("{", ",", "}")
-    // per-query completed-task counts (max over reps): the scaling
-    // evidence — a query floored at a handful of tasks cannot speed up
-    // with more cores regardless of its wall clock
-    val tasksJson = results.sortBy(_._2)
-      .map { case (k, _, _) =>
-        val ts = tasks(idxOf(k))
-        "\"" + k + "\":" + (if (ts.isEmpty) -1L else ts.max) }
-      .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rep_walls":$repWallsJson,"tasks":$tasksJson$errField,"movers":$moversJson,"cluster":$clusterJson,"suspects":$suspectsJson$loadField,"sf":"$sfDir"}"""
+    val counts = countFields(results.sortBy(_._2).map(_._1),
+      k => tasks(idxOf(k)).toSeq, k => compiles(idxOf(k)).toSeq)
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rep_walls":$repWallsJson,$counts$errField,"movers":$moversJson,"cluster":$clusterJson,"suspects":$suspectsJson$loadField,"sf":"$sfDir"}"""
     println(line)
     // the driver's stdout capture truncates long output (BENCH_r07 lost 70
     // of 134 per-query numbers that way) — persist the complete line to a

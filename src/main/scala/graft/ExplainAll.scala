@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Diagnostic main: dump `explain("formatted")` for every registered query
@@ -15,14 +14,7 @@ object ExplainAll {
     // subplans the final plan hides behind Scan ExistingRDD) — see
     // Ckpt.ExplainDirKey
     val ckptDir = args.lift(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     ckptDir.foreach(d => spark.conf.set(Ckpt.ExplainDirKey, d))
     val sb = new StringBuilder

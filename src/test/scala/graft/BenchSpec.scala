@@ -185,6 +185,16 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.jArr(Nil) == "[]")
   }
 
+  test("artifact format: per-query tasks (max over reps) and codegen_compiles (last rep)") {
+    // codegen_compiles reads the LAST rep: the first rep of a query pays
+    // its cold compiles, a warm rep compiles only classes whose code
+    // changed between runs
+    val tasks = Map("a" -> Seq(4L, 6L, 5L), "b" -> Seq.empty[Long])
+    val compiles = Map("a" -> Seq(120L, 3L, 0L), "b" -> Seq.empty[Long])
+    assert(Bench.countFields(Seq("a", "b"), tasks, compiles) ==
+      "\"tasks\":{\"a\":6,\"b\":-1},\"codegen_compiles\":{\"a\":0,\"b\":-1}")
+  }
+
   test("verdict: NO computed ratio (stale/unreadable/zero-overlap anchor) falls back to loadavg (ADVICE r14)") {
     // anchorStats yields -1 when the anchor shares no query names; that
     // must NOT read as anchor-backed "quiet" on a hot host

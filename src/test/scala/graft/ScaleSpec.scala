@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import graft.etl.Warehouse
 import graft.functions.Skew
@@ -51,13 +52,42 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("GraftSession builder installs the SQL functions and optimizer rule") {
-    // the shared test session isn't built via GraftSession; validate the
-    // builder wiring on the same JVM-wide session via runtime registration
-    graft.plans.GraftExtensions.registerRuntime(spark)
+    // the shared test session is built by GraftSession.local
     val v = spark.sql(
       "SELECT norm_sq_f32(array(cast(3.0 as float), cast(4.0 as float))) AS n")
       .as[Double].head()
     assert(v == 25.0)
+  }
+
+  test("GraftSession builder sizes the codegen cache to the engine's working set") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheMaxEntries.toString)
+  }
+
+  test("a warm re-run of registered queries compiles no generated class") {
+    // The six queries need ~290 generated classes at sf0.001, more than
+    // Spark's default 100-entry codegen cache holds: at the default size
+    // the second run recompiles evicted classes. AQE is off for the test
+    // because its run-time choices (which side of a join becomes the
+    // broadcast build side, the order query stages get their codegen
+    // ids) vary from run to run, and each variant is a new class.
+    val names = Seq("q171_label_prop", "q140_entity_resolution",
+      "q167_bfs_reach", "q65_dup_clusters", "q68_cluster_reps",
+      "q163_semdedup_scaled")
+    def runAll(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      names.foreach { n =>
+        operators.Registry.byName(n).run(spark, TestSpark.sf)
+          .write.format("noop").mode("overwrite").save()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      runAll(): Unit
+      assert(runAll() == 0L)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("bucketed tables join without any exchange") {

@@ -3,17 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (cuts JVM+session startup to
-  * once per `sbt test`).
+  * once per `sbt test`), built as production builds it.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val sf: String = "/root/testdata/sf0.001"
 
