@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The library's session entry point: a SparkSession with the engine's
   * recommended configuration and extensions (native SQL functions +
   * optimizer rules) pre-installed. Every engine main (`Verify`, `Bench`,
-  * `ExplainAll`, `Probe`) and the test suites build through [[local]], so
+  * `ExplainAll`) and the test suites build through [[local]], so
   * the oracle, the benchmarks and the plan dumps all run the production
   * session.
   *

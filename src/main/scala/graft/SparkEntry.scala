@@ -17,6 +17,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map(q => q.name -> q.run).toMap
 
+  /** A query selection as given on a command line or in an env var: names
+    * separated by commas or spaces, spread over any number of arguments.
+    * Fails with every name that is not registered, so a misspelled name
+    * cannot silently shrink a run.
+    */
+  def queryNames(args: Seq[String]): Set[String] = {
+    val names = args.flatMap(_.split("[,\\s]+")).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. As of round 2 every registered query has
     * one (portable hash families / byte arithmetic / asserted error

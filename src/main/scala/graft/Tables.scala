@@ -53,8 +53,8 @@ object Tables {
   /** Session-scoped RELATION cache (r19) — the metastore role a real
     * deployment's catalog plays. `spark.read.parquet` re-lists the path
     * and re-reads footers for schema on EVERY call: measured 57 ms per
-    * table warm (Probe `tables-build-price`, ~513 ms for all nine), paid
-    * per query invocation per table touched — a fixed tax of tens of
+    * table warm (~513 ms for all nine), paid per query invocation per
+    * table touched — a fixed tax of tens of
     * seconds across a 198-query bench pass, and pure planner overhead at
     * any scale. The cache stores the LAZY relation (logical plan only —
     * no rows, no results; every action still scans parquet), keyed by

@@ -6,11 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [query names, comma- or space-separated]
     // (the optional filter limits both the dumps and oracle_sql.json,
-    // so a filtered dump checks clean)
+    // so a filtered dump checks clean; an unknown name fails the run)
     val sfDir = args(0)
     val outDir = args(1)
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args.drop(2).flatMap(_.split(",")).toSet)
+      if (args.length > 2) Some(SparkEntry.queryNames(args.toSeq.drop(2)))
       else None
     def selected(name: String): Boolean = only.forall(_.contains(name))
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)

@@ -2900,10 +2900,10 @@ object DedupOps {
     * neither shuffle carries text. The digest is grouping-internal
     * (never output), so the engine lane uses (xxhash64(text),
     * length(text)) — 16 bytes on the wire vs md5's 32-char string and a
-    * much cheaper hash (r16 verdict order 8; the A/B is
-    * `Probe q192-digest-price`, PERF.md r17). Collision honesty: a
-    * false dup needs two distinct SAME-LENGTH texts sharing a 64-bit
-    * hash — ~N²/2^65 before the length split (≈3 doc-pairs at 10^10
+    * much cheaper hash (r16 verdict order 8; the A/B is in PERF.md
+    * r17). Collision honesty: a false dup needs two distinct
+    * SAME-LENGTH texts sharing a 64-bit hash — ~N²/2^65 before the
+    * length split (≈3 doc-pairs at 10^10
     * docs) — which perturbs an aggregate RATE report by ~1e-9 relative;
     * the exact-dedup family (q19/q64), which deletes docs rather than
     * reporting rates, keeps md5. The DuckDB twin stays md5 (DuckDB has

@@ -1965,10 +1965,10 @@ object SimilarityOps {
   def q147AnnRecall(spark: SparkSession, dir: String): DataFrame =
     annRecallAt(spark, dir, nProbe = IvfNProbe)
 
-  /** q147's harness at an arbitrary probe width — the sweep that picks
-    * the operating point (`graft.Probe ivf-sweep`) and the planted-
-    * cluster spec both run through this, so the measured curve is the
-    * REGISTERED code path, not a reimplementation.
+  /** q147's harness at an arbitrary probe width — the operating-point
+    * sweep and the planted-cluster spec (`AnnOperatingPointSpec`) both
+    * run through this, so the measured curve is the REGISTERED code
+    * path, not a reimplementation.
     */
   private[graft] def annRecallAt(spark: SparkSession, dir: String,
       nProbe: Int): DataFrame =
@@ -2047,8 +2047,8 @@ object SimilarityOps {
     * cost at each probe width. `scanned_vecs` (Σ probed-cell sizes over
     * the 20-query panel) over `corpus_vecs × 20` is the fraction of the
     * corpus a lookup touches — the cost term that scales to 100 TB,
-    * where per-query wall time is proportional to it. Driven by
-    * `graft.Probe ivf-sweep` and the planted-cluster spec.
+    * where per-query wall time is proportional to it. Driven by the
+    * planted-cluster spec, `AnnOperatingPointSpec`.
     */
   private[graft] def ivfSweep(spark: SparkSession, dir: String,
       probes: Seq[Int]): DataFrame = {

@@ -5,7 +5,9 @@ oracle query must die with a NAMED TIMEOUT line and be listed in the
 BUDGET-KILLED summary — not hang the sweep, not pass, not crash the
 checker for the queries after it.
 
-Run: python3 tools/test_check_oracle.py    (exit 0 = green)
+Run: python3 tools/test_check_oracle.py [fixture_dir]    (exit 0 = green)
+The fixture dir defaults to SF below; any fixture with the engine's
+tables works, since the slow query does not read them.
 Dev tooling only — not part of the library.
 """
 import json
@@ -22,16 +24,17 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 SF = "/root/testdata/sf0.001"
 
 
-def main():
+def main(sf):
     out = tempfile.mkdtemp(prefix="check-oracle-selftest-")
     try:
-        # one slow query (triple self cross join: ~6e3^3 = 2e11 tuples,
-        # unfinishable inside any sane budget) and one healthy query that
-        # must still PASS after the interrupt — proving the connection
-        # survives a budget kill and the sweep continues.
+        # one slow query (a cross join of two generated ranges: 1e16
+        # tuples whatever the fixture's size, unfinishable inside any sane
+        # budget) and one healthy query that must still PASS after the
+        # interrupt — proving the connection survives a budget kill and
+        # the sweep continues.
         oracle = {
-            "q_slow": ("SELECT count(*) AS n FROM lineitem a, lineitem b, "
-                       "lineitem c WHERE a.l_partkey = b.l_partkey + c.l_partkey"),
+            "q_slow": ("SELECT count(*) AS n FROM range(100000000) a, "
+                       "range(100000000) b WHERE (a.range * 31 + b.range) % 1000003 = 7"),
             "q_after": "SELECT count(*) AS n FROM region",
         }
         with open(os.path.join(out, "oracle_sql.json"), "w") as f:
@@ -43,13 +46,13 @@ def main():
         os.makedirs(os.path.join(out, "q_after"))
         import duckdb
         n_region = duckdb.sql(
-            f"SELECT count(*) FROM '{SF}/region.parquet'").fetchone()[0]
+            f"SELECT count(*) FROM '{sf}/region.parquet'").fetchone()[0]
         pq.write_table(pa.table({"n": pa.array([n_region], type=pa.int64())}),
                        os.path.join(out, "q_after", "part-0.parquet"))
 
         p = subprocess.run(
             [sys.executable, os.path.join(HERE, "check_oracle.py"),
-             SF, out, "--timeout", "3"],
+             sf, out, "--timeout", "3"],
             capture_output=True, text=True, timeout=120)
         got = p.stdout
         ok = True
@@ -78,4 +81,4 @@ def main():
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else SF))
