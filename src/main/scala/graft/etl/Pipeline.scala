@@ -1,26 +1,45 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.WeatherJson
 
 /** Q1/Q2 — the validation gates the reference runs as Airflow tasks
   * (/root/reference/dags/weather_etl_pipeline.py:95-116, 194-215).
   */
 object Checks {
 
-  /** Pre-transform structural validation: expected record count, required
-    * nested fields present, non-empty time series.
+  /** The raw extract's two data checks as aggregate columns: the city
+    * record count and the number of records with an empty time series.
+    * `validateRaw` computes them in one aggregate; `Pipeline.run` observes
+    * them on the scan that fills its cache, so they cost no extra pass.
+    */
+  private[etl] val rawMetrics: Seq[Column] = Seq(
+    count(lit(1)).as("records"),
+    count(when(size(col("daily.time")) === 0, true)).as("empty_series"))
+
+  /** Driver-only structural checks: required nested fields present. */
+  private[etl] def requireShape(schema: StructType): Unit = {
+    require(schema.fieldNames.contains("daily"), "missing 'daily' struct")
+    val dailyFields = schema("daily").dataType.asInstanceOf[StructType].fieldNames.toSet
+    require(dailyFields.contains("temperature_2m_max"), "missing daily.temperature_2m_max")
+  }
+
+  /** The data checks on the values of [[rawMetrics]]. */
+  private[etl] def requireRawMetrics(records: Long, emptySeries: Long, expectedCities: Int): Unit = {
+    require(records == expectedCities, s"expected $expectedCities city records, got $records")
+    require(emptySeries == 0, s"$emptySeries city records have an empty time series")
+  }
+
+  /** Pre-transform structural validation: required nested fields present,
+    * expected record count, non-empty time series. One scan of `df`.
     */
   def validateRaw(df: DataFrame, expectedCities: Int): Unit = {
-    val n = df.count()
-    require(n == expectedCities, s"expected $expectedCities city records, got $n")
-    val fields = df.schema.fieldNames.toSet
-    require(fields.contains("daily"), "missing 'daily' struct")
-    val dailyFields = df.schema("daily").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-    require(dailyFields.contains("temperature_2m_max"), "missing daily.temperature_2m_max")
-    val empty = df.filter(size(col("daily.time")) === 0).count()
-    require(empty == 0, s"$empty city records have an empty time series")
+    requireShape(df.schema)
+    val m = df.agg(rawMetrics.head, rawMetrics.tail: _*).head()
+    requireRawMetrics(m.getLong(0), m.getLong(1), expectedCities)
   }
 
   /** Post-load quality gate: the ds slice must be non-empty. */
@@ -51,32 +70,38 @@ object Pipeline {
   }
 
   /** Full run for one execution date over already-extracted raw JSON.
-    * Single lineage with one cache of the enriched frame before fan-out to
-    * the two staging writes — deliberately NOT replicating the reference's
-    * repeated count() recomputations (SURVEY.md §7 risk 6).
+    *
+    * The extract is parsed once. The enriched frame is cached, and its
+    * count is the load's first action: it fills the cache, is the `staged`
+    * count, and delivers the raw checks observed on the scan. Those checks
+    * run before any write, so a failed validation writes nothing. Every
+    * later stage reads the cache, so none of them re-parses the JSON — the
+    * reference's repeated count() recomputations (SURVEY.md §7 risk 6) are
+    * deliberately not replicated. The cache is released on every exit,
+    * failures included.
     */
   def run(spark: SparkSession, rawPath: String, warehouseRoot: String, ds: String,
       expectedCities: Int = 5): Map[String, Long] = {
     val wh = Warehouse(spark, warehouseRoot)
-    val raw = retry() {
-      spark.read.schema(Schemas.raw).option("multiLine", value = true).json(rawPath)
-    }
-    retry() { Checks.validateRaw(raw, expectedCities) }
-    val enriched = retry() {
-      Transform.addDerivedMetrics(Transform.flattenDaily(raw)).cache()
-    }
-    retry() { wh.overwrite("staging_weather", enriched) }
-    retry() { wh.overwrite("staging_weather_summary", Transform.computeAggregates(enriched)) }
-    retry() { wh.seedWeatherCodes() }
-    retry() { wh.seedCities(enriched) }
-    retry() { wh.upsertFacts(enriched, ds) }
-    retry() { wh.overwrite("agg_monthly_weather", Transform.monthlyRollup(enriched)) }
-    val loaded = retry() { Checks.qualityCheck(wh.read("fact_daily_weather"), ds) }
-    retry() { wh.assertUniqueKeys() }
-    // count() while still cached — counting after unpersist would re-run
-    // the whole flatten+enrich lineage (SURVEY §7 risk 6)
-    val staged = enriched.count()
-    enriched.unpersist()
-    Map("staged" -> staged, "loaded" -> loaded)
+    val raw = retry() { WeatherJson.readRaw(spark, rawPath) }
+    Checks.requireShape(raw.schema)
+    val observed = Observation()
+    val enriched = Transform.addDerivedMetrics(Transform.flattenDaily(
+      raw.observe(observed, Checks.rawMetrics.head, Checks.rawMetrics.tail: _*))).cache()
+    try {
+      val staged = retry() { enriched.count() }
+      val m = observed.get
+      Checks.requireRawMetrics(
+        m("records").asInstanceOf[Long], m("empty_series").asInstanceOf[Long], expectedCities)
+      retry() { wh.overwrite("staging_weather", enriched) }
+      retry() { wh.overwrite("staging_weather_summary", Transform.computeAggregates(enriched)) }
+      retry() { wh.seedWeatherCodes() }
+      retry() { wh.seedCities(enriched) }
+      retry() { wh.upsertFacts(enriched, ds) }
+      retry() { wh.overwrite("agg_monthly_weather", Transform.monthlyRollup(enriched)) }
+      val loaded = retry() { Checks.qualityCheck(wh.read("fact_daily_weather"), ds) }
+      retry() { wh.assertUniqueKeys(Some(ds)) }
+      Map("staged" -> staged, "loaded" -> loaded)
+    } finally enriched.unpersist()
   }
 }

@@ -66,6 +66,48 @@ object Schemas {
     StructField("wind_speed_max", DoubleType),
     StructField("weather_code", DoubleType)))
 
+  /** fact_daily_weather as `Warehouse.upsertFacts` writes it
+    * (the reference DDL, sql/create_weather_tables.sql:90-105). The partition
+    * column `date` comes last, which is where Spark puts it on read.
+    */
+  val fact: StructType = StructType(Seq(
+    StructField("city_name", StringType),
+    StructField("temp_max", DoubleType),
+    StructField("temp_min", DoubleType),
+    StructField("temp_range", DoubleType),
+    StructField("precipitation", DoubleType),
+    StructField("wind_speed_max", DoubleType),
+    StructField("weather_code", IntegerType),
+    StructField("weather_category", StringType),
+    StructField("loaded_at", TimestampType),
+    StructField("date", DateType)))
+
+  /** dim_city as `Warehouse.seedCities` writes it
+    * (the reference DDL, sql/create_weather_tables.sql:40-48).
+    */
+  val dimCity: StructType = StructType(Seq(
+    StructField("city_id", LongType),
+    StructField("city_name", StringType),
+    StructField("latitude", DoubleType),
+    StructField("longitude", DoubleType),
+    StructField("timezone", StringType),
+    StructField("created_at", TimestampType),
+    StructField("updated_at", TimestampType)))
+
+  /** dim_weather_code as `Warehouse.seedWeatherCodes` writes it. */
+  val dimWeatherCode: StructType = StructType(Seq(
+    StructField("weather_code", IntegerType),
+    StructField("description", StringType),
+    StructField("category", StringType)))
+
+  /** The warehouse tables a daily load reads back, by name. `Warehouse.read`
+    * passes these instead of letting Spark infer a schema from a footer.
+    */
+  val warehouse: Map[String, StructType] = Map(
+    "fact_daily_weather" -> fact,
+    "dim_city" -> dimCity,
+    "dim_weather_code" -> dimWeatherCode)
+
   /** The 21-row WMO weather-code dimension seed, verbatim from
     * /root/reference/sql/create_weather_tables.sql:60-82. NOTE: codes 80/81
     * are 'Rain' here but 'Severe' under the CASE chain in Enrich — the two

@@ -9,12 +9,21 @@ import org.apache.spark.sql.functions._
   * `date` so (a) the per-ds upsert rewrites exactly one partition and
   * (b) date predicates prune at the scan. At 100 TB this is the layout
   * that keeps daily loads O(day) instead of O(history).
+  *
+  * Reads of the tables a daily load reads back (`fact_daily_weather`,
+  * `dim_city`, `dim_weather_code`) pass their declared schema from
+  * [[Schemas.warehouse]], so Spark runs no footer-reading job to infer
+  * one. `WeatherPipelineSpec` pins each declared schema to the one Spark
+  * infers from the written files, so a change to a written column fails
+  * the suite instead of reading back nulls. Every other table is read
+  * with inference.
   */
 final case class Warehouse(spark: SparkSession, root: String) {
 
   def path(table: String): String = s"$root/$table"
 
-  def read(table: String): DataFrame = spark.read.parquet(path(table))
+  def read(table: String): DataFrame =
+    Schemas.warehouse.get(table).fold(spark.read)(spark.read.schema(_)).parquet(path(table))
 
   /** Existence via the Hadoop FileSystem of the warehouse root's scheme —
     * a java.io.File check would always say "no" on hdfs:// or s3:// roots
@@ -84,10 +93,12 @@ final case class Warehouse(spark: SparkSession, root: String) {
           .unionByName(slice)
       }
     // merged reads the partition it overwrites → materialize through a
-    // staging dir first (parquet has no transactional MERGE; SURVEY §7.5)
+    // staging dir first (parquet has no transactional MERGE; SURVEY §7.5).
+    // The read-back knows its schema; the one-day slice is coalesced so the
+    // date partition gets one file however many tasks wrote the tmp dir.
     val tmp = path(table + "__tmp")
     merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp)
+    spark.read.schema(merged.schema).parquet(tmp).coalesce(1)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date")
@@ -220,11 +231,19 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** Q5 — uniqueness assertion on the fact natural key. */
-  def assertUniqueKeys(): Unit = {
-    val dups = read("fact_daily_weather")
-      .groupBy("city_name", "date").count().filter(col("count") > 1)
-    require(dups.isEmpty, "fact_daily_weather violates UNIQUE(city_name, date)")
+  /** Q5 — uniqueness assertion on the fact natural key, over the whole
+    * table or, given a ds, over that date partition only. The scoped check
+    * is enough after a daily load: `upsertFacts` rewrites only the ds
+    * partition, and every other partition passed its own load's check. A
+    * path that rewrites other partitions, such as `compact`, needs the full
+    * check.
+    */
+  def assertUniqueKeys(ds: Option[String] = None): Unit = {
+    val fact = read("fact_daily_weather")
+    val scoped = ds.fold(fact)(d => fact.filter(col("date") === lit(java.sql.Date.valueOf(d))))
+    val dups = scoped.groupBy("city_name", "date").count().filter(col("count") > 1)
+    require(dups.isEmpty, "fact_daily_weather violates UNIQUE(city_name, date)" +
+      ds.fold("")(d => s" in partition date=$d"))
   }
 }
 

@@ -12,9 +12,15 @@ import graft.etl.Schemas
   */
 object WeatherJson {
 
-  /** Schema-enforced scan of pretty-printed raw extracts (S3). */
+  /** Schema-enforced scan of pretty-printed raw extracts (S3), spread over
+    * the session's cores. A JSON array cannot be split, so the scan of one
+    * file is one task; the round-robin repartition right after it lets
+    * everything downstream (flatten, enrich, the cache fill, the writes)
+    * run in `defaultParallelism` tasks instead of on one core.
+    */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.raw).option("multiLine", value = true).json(path)
+      .repartition(spark.sparkContext.defaultParallelism)
 
   /** Schema-inferred scan (S4 — the reference's test-only path). */
   def readInferred(spark: SparkSession, path: String, multiLine: Boolean = true): DataFrame =

@@ -207,4 +207,96 @@ class WeatherPipelineSpec extends AnyFunSuite {
     assert(spark.sql("SELECT * FROM v_latest_weather").count() == 2)
     assert(spark.sql("SELECT city_name FROM v_weekly_trends").columns.sameElements(Array("city_name")))
   }
+
+  test("load shape: one JSON scan, a cache fill on every core, one file per fact partition") {
+    import org.apache.spark.graft.LoadRecorder
+    val raw = writeRaw()
+    val wh = TestSpark.scratch("weather-wh-shape")
+    val ds = "2024-01-15"
+    val (_, rec) = LoadRecorder.record(spark)(Pipeline.run(spark, raw, wh, ds, expectedCities = 2))
+    assert(rec.jsonScanJobs.size == 1, s"JSON-scan jobs: ${rec.jsonScanJobs}")
+    val fill = rec.stages.map(_._2).filter(LoadRecorder.touchesCache).minBy(_.stageId)
+    assert(fill.numTasks == spark.sparkContext.defaultParallelism,
+      s"cache fill ran ${fill.numTasks} tasks")
+    val factFiles = new java.io.File(s"$wh/fact_daily_weather/date=$ds").list()
+    assert(factFiles.count(_.endsWith(".parquet")) == 1, factFiles.mkString(", "))
+  }
+
+  test("declared warehouse schemas equal the ones Spark infers from the written files") {
+    val wh = TestSpark.scratch("weather-wh-schemas")
+    Pipeline.run(spark, writeRaw(), wh, "2024-01-15", expectedCities = 2)
+    val w = Warehouse(spark, wh)
+    def nullable(s: org.apache.spark.sql.types.StructType) =
+      org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
+    Schemas.warehouse.foreach { case (table, declared) =>
+      assert(nullable(spark.read.parquet(w.path(table)).schema) == nullable(declared), table)
+      assert(w.read(table).schema.fieldNames.toSeq == declared.fieldNames.toSeq, table)
+    }
+  }
+
+  test("a failed validation writes nothing and leaks no cache") {
+    val wh = TestSpark.scratch("weather-wh-invalid")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, writeRaw(), wh, "2024-01-15", expectedCities = 3)
+    }
+    assert(e.getMessage.contains("expected 3 city records, got 2"))
+    assert(sc.getPersistentRDDs.keySet == before)
+    assert(new java.io.File(wh).list().isEmpty, "no table directory under the warehouse root")
+  }
+
+  test("a duplicate key in the load's ds partition fails the load") {
+    val chicago = prettyJson.substring(prettyJson.indexOf("  {\n    \"city\": \"Chicago\""),
+      prettyJson.lastIndexOf('}') + 1)
+    val dir = TestSpark.scratch("weather-raw-dup")
+    val raw = s"$dir/weather_raw.json"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(raw),
+      prettyJson.stripSuffix("\n]") + ",\n" + chicago + "\n]")
+    val wh = TestSpark.scratch("weather-wh-dup")
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, raw, wh, "2024-01-15", expectedCities = 3)
+    }
+    assert(e.getMessage.contains("violates UNIQUE(city_name, date) in partition date=2024-01-15"))
+  }
+
+  test("validateRaw fails on the record count and on an empty time series") {
+    val df = WeatherJson.readRaw(spark, writeRaw())
+    Checks.validateRaw(df, expectedCities = 2)
+    val count = intercept[IllegalArgumentException](Checks.validateRaw(df, expectedCities = 5))
+    assert(count.getMessage.contains("expected 5 city records, got 2"))
+    val emptied = df.withColumn("daily",
+      col("daily").withField("time", when($"city" === "Chicago", array().cast("array<string>"))
+        .otherwise($"daily.time")))
+    val empty = intercept[IllegalArgumentException](Checks.validateRaw(emptied, expectedCities = 2))
+    assert(empty.getMessage.contains("1 city records have an empty time series"))
+  }
+
+  test("a daily load scans one fact partition, however long the history") {
+    import org.apache.spark.graft.LoadRecorder
+    val wh = TestSpark.scratch("weather-wh-history")
+    val w = Warehouse(spark, wh)
+    // 60 days of history ending on the load's ds, one small partitioned write
+    spark.range(0, 60, 1, 1).select(
+        lit("New York").as("city_name"),
+        date_add(lit(java.sql.Date.valueOf("2023-11-17")), $"id".cast("int")).as("date"),
+        lit(40.0).as("temp_max"), lit(30.0).as("temp_min"), lit(10.0).as("temp_range"),
+        lit(0.0).as("precipitation"), lit(10.0).as("wind_speed_max"),
+        lit(1).as("weather_code"), lit(null).cast("string").as("weather_category"),
+        current_timestamp().as("loaded_at"))
+      .write.partitionBy("date").parquet(w.path("fact_daily_weather"))
+    val ds = "2024-01-15"
+    val (_, rec) = LoadRecorder.record(spark)(Pipeline.run(spark, writeRaw(), wh, ds, expectedCities = 2))
+    val factScans = rec.fileScans.filter(_.relation.location.rootPaths
+      .exists(_.toString.endsWith("/fact_daily_weather")))
+    assert(factScans.nonEmpty)
+    val read = factScans.map(_.metrics("numPartitions").value)
+    assert(read.forall(_ == 1), s"fact partitions read per scan: $read")
+    // upsert-wins on the ds partition, every other partition untouched
+    val fact = w.read("fact_daily_weather")
+    assert(fact.count() == 61)
+    assert(fact.filter($"date" === lit(java.sql.Date.valueOf(ds)) && $"city_name" === "New York")
+      .select($"temp_max").as[Double].collect().toSeq == Seq(42.8))
+    w.assertUniqueKeys()
+  }
 }
