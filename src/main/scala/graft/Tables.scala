@@ -38,8 +38,7 @@ final case class Tables(spark: SparkSession, dir: String) {
       case org.apache.spark.sql.types.TimestampNTZType =>
         // plain TIMESTAMP(MICROS) parquet surfaces as NTZ; present it as
         // TIMESTAMP (LTZ) like the legacy path did — the session runs in
-        // UTC so the cast is value-preserving, and watermarks/windows in
-        // the streaming twins require LTZ event time
+        // UTC so the cast is value-preserving
         raw.withColumn("ts",
           raw("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => raw

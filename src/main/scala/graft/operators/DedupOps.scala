@@ -149,94 +149,24 @@ object DedupOps {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** Exact pairwise Jaccard for a candidate-pair frame (doc_a, doc_b). */
-  private def jaccardOf(pairsInter: DataFrame, counts: DataFrame, threshold: Double): DataFrame = {
-    import pairsInter.sparkSession.implicits._
-    jaccardFromSized(
-      pairsInter
-        .join(counts.select($"doc_id".as("doc_a"), $"n_sh".as("n_a")), "doc_a")
-        .join(counts.select($"doc_id".as("doc_b"), $"n_sh".as("n_b")), "doc_b"),
-      threshold)
-  }
-
   /** Near-dup pairs at a Jaccard threshold over a df-capped inverted
-    * index, with an optional PPJoin-style prefix filter.
+    * index.
     *
     * Semantics (mirrored exactly by the SQL oracles): intersections are
     * counted over RARE shingles only (global df ≤ dfCap — the classic
     * stop-shingle cut; shingles in more docs discriminate nothing and
     * only create join skew), denominators use the full shingle-set
-    * sizes. Both candidate paths produce identical results:
-    *
-    *   - default: self-join the capped postings, count shared shingles
-    *     per pair (one groupBy). Join volume is bounded by dfCap² per
-    *     shingle — already skew-proof.
-    *   - prefixFilter=true: additionally order each doc's rare shingles
-    *     rarest-first by (global df, shingle) and join only each side's
-    *     first n_rare − ceil(t·n_rare) + 1 postings (Bayardo et al.
-    *     2007; Xiao et al. 2008). Lossless w.r.t. the capped threshold:
-    *     a qualifying pair has inter ≥ t·n_rare on both sides (from
-    *     inter ≥ t/(1+t)·(n_a+n_b) and n_full ≥ n_rare). Candidates are
-    *     then verified by an exact rare-set intersection.
-    *
-    * MEASURED (local[32], sf0.1, 5000 docs): the prefix path is ~2×
-    * SLOWER here — it trims join input by (1−t) but pays two extra
-    * posting-stream shuffles (prefix rank window + rare-set collect),
-    * and the capped join output is already tiny on this corpus. It wins
-    * only where candidate-PAIR volume dominates: high thresholds and
-    * dup-heavy skewed corpora, where the (1−t)² cut on quadratic join
-    * output outweighs the linear extra shuffles. Default stays the
-    * plain capped join; flip the flag when profiling says pairs
-    * dominate.
+    * sizes. The candidate pairs come from the sizedPairs inverted-index
+    * core: one by-shingle shuffle, join volume bounded by dfCap² per
+    * shingle — already skew-proof.
     */
   private[graft] def jaccardPairs(docs: DataFrame, threshold: Double,
-      dfCap: Int = 25, prefixFilter: Boolean = false): DataFrame = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // deliberately NOT cached: the frame is consumed by two branches, but
-    // a .cache() here would leak one pinned copy per invocation for the
-    // session lifetime (bench/specs call this repeatedly), and at corpus
-    // scale you recompute a projection rather than pin the shingle set
-    val sh = shingledFrom(docs)
-    if (!prefixFilter) {
-      // One-pass default path: the sizedPairs inverted-index core (one
-      // by-shingle shuffle; see its scaladoc — the classic dfreq-aggregate
-      // + join-back plan costs a second shuffle and a second pass over
-      // the uncached shingling upstream). The PropertySpec
-      // path-equivalence tests pin this against the dfreq-join
-      // formulation the prefix branch still uses.
-      return jaccardFromSized(sizedPairs(sh, dfCap), threshold)
-    }
-    val counts = sh.select($"doc_id", size($"shingles").as("n_sh"))
-    val post = sh.select($"doc_id", explode($"shingles").as("s"))
-    val dfreq = post.groupBy($"s").agg(count(lit(1)).as("df"))
-    val postRare = post.join(dfreq.filter($"df" <= dfCap), "s")
-    val inter = {
-        // one doc-keyed shuffle carries both the prefix rank and the
-        // rare-set size (row_number + count share the window exchange)
-        val wDoc = Window.partitionBy($"doc_id").orderBy($"df", $"s")
-        val wAll = Window.partitionBy($"doc_id")
-        val ranked = postRare
-          .withColumn("rn", row_number().over(wDoc))
-          .withColumn("n_rare", count(lit(1)).over(wAll))
-        // ceil over double arithmetic can overestimate (25 * 0.28 =
-        // 7.000000000000001 → ceil 8, true α 7), which would SHORTEN the
-        // prefix and break losslessness — shave an epsilon first
-        val prefix = ranked
-          .filter($"rn" <= $"n_rare" - ceil($"n_rare" * threshold - lit(1e-9)) + 1)
-          .select($"doc_id", $"s")
-        val cand = prefix.as("a")
-          .join(prefix.as("b"), $"a.s" === $"b.s" && $"a.doc_id" < $"b.doc_id")
-          .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b")).distinct()
-        val rareSets = ranked.groupBy($"doc_id").agg(collect_list($"s").as("rsh"))
-        cand
-          .join(rareSets.select($"doc_id".as("doc_a"), $"rsh".as("rsh_a")), "doc_a")
-          .join(rareSets.select($"doc_id".as("doc_b"), $"rsh".as("rsh_b")), "doc_b")
-          .select($"doc_a", $"doc_b",
-            size(array_intersect($"rsh_a", $"rsh_b")).cast("long").as("inter"))
-      }
-    jaccardOf(inter, counts, threshold)
-  }
+      dfCap: Int = 25): DataFrame =
+    // deliberately NOT cached: a .cache() here would leak one pinned copy
+    // per invocation for the session lifetime (bench/specs call this
+    // repeatedly), and at corpus scale you recompute a projection rather
+    // than pin the shingle set
+    jaccardFromSized(sizedPairs(shingledFrom(docs), dfCap), threshold)
 
   /** Near-dup via word-3-gram Jaccard ≥ 0.2 through the df-capped
     * inverted-index join above.
@@ -245,7 +175,7 @@ object DedupOps {
     jaccardPairs(Tables(spark, dir).documents, 0.2)
 
   /** DuckDB twin: shared rare shingles from the df-capped inverted-index
-    * join (both candidate paths in jaccardPairs produce exactly this).
+    * join, as jaccardPairs computes them.
     */
   val q20Sql: String =
     s"""WITH toks AS (
@@ -351,21 +281,14 @@ object DedupOps {
     * (minhashLsh) and row-local (bandedDocs) constructions so the two can
     * never drift.
     */
-  private[graft] def bandKey(portable: Boolean)(cols: Seq[Column]): Column =
-    if (portable) md5(concat_ws("|", cols: _*)) else xxhash64(cols: _*)
+  private[graft] def bandKey(cols: Seq[Column]): Column =
+    md5(concat_ws("|", cols: _*))
 
   /** Row-local banded MinHash signatures: one output row per (doc, band)
-    * with the band's bucket key — the SAME hash families, lane math and
+    * with the band's bucket key — the SAME hash family, lane math and
     * band construction as minhashLsh, but expressed entirely as per-row
-    * array operations (transform/array_min — no aggregation, no shuffle).
-    * That makes it legal in a Structured Streaming plan, where the
-    * aggregated groupBy-min construction would itself be a stateful
-    * operator. `carry` columns (e.g. the event-time column) ride along.
-    *
-    * The portable family hoists the one-md5-per-shingle base hash into a
-    * materialized column so the 16 affine lanes don't recompute the
-    * cryptographic hash; the engine family (xxhash64, the scale path)
-    * hashes per (lane, shingle) directly — still row-local and cheap.
+    * array operations (no aggregation, no shuffle), so a consumer can
+    * window over the buckets without a by-doc exchange first.
     *
     * Documents with fewer than 3 words have NO trigram shingles, so they
     * cannot near-duplicate anything; a keep/drop materialization must
@@ -376,66 +299,34 @@ object DedupOps {
     * all digits and pipes) — every downstream consumer then sees them win
     * all their buckets and keeps them unconditionally.
     */
-  private[graft] def bandedDocs(docs: DataFrame, carry: Seq[String],
-      portable: Boolean): DataFrame = {
+  private[graft] def bandedDocs(docs: DataFrame): DataFrame = {
     val base = docs
       .filter(wordsGe3(col("text")))
       .withColumn("__sh",
         array_distinct(graft.plans.TextExpressions.wordTrigrams(col("text"))))
-    // portable lanes: ALL 16 minima in one codegen'd pass over the
-    // shingle array (plans.TextExpressions.PortableMinHashLanes, r19) —
-    // the HOF form paid one interpreted md5-fold transform plus 16
-    // interpreted array_min(transform(...)) passes per row. Same base
-    // hash, lane arithmetic and empty/null semantics (spec-pinned); the
-    // __mhs array is materialized by its own projection so the 16
-    // element reads never re-run the scan.
-    val hoisted =
-      if (portable) base.withColumn("__mhs",
-        graft.plans.TextExpressions.portableMinHashLanes(
-          col("__sh"), hashA, hashB, P31))
-      else base
-    def lane(i: Int): Column =
-      if (portable) col("__mhs").getItem(i)
-      else array_min(transform(col("__sh"), s => xxhash64(lit(i), s)))
-    val keep = col("doc_id") +: carry.map(col)
+    // ALL 16 minima in one codegen'd pass over the shingle array
+    // (plans.TextExpressions.PortableMinHashLanes; base hash, lane
+    // arithmetic and empty/null semantics spec-pinned); the __mhs array
+    // is materialized by its own projection so the 16 element reads never
+    // re-run the scan.
+    val hoisted = base.withColumn("__mhs",
+      graft.plans.TextExpressions.portableMinHashLanes(col("__sh"), hashA, hashB, P31))
     val sigs = hoisted.select(
-      keep ++ (0 until NumHashes).map(i => lane(i).as(s"mh$i")): _*)
+      col("doc_id") +: (0 until NumHashes).map(i => col("__mhs").getItem(i).as(s"mh$i")): _*)
     val banded = sigs.select(
-      keep :+ explode(array((0 until Bands).map { b =>
+      col("doc_id"),
+      explode(array((0 until Bands).map { b =>
         struct(
           lit(b).as("band"),
-          bandKey(portable)(
+          bandKey(
             (b * RowsPerBand until (b + 1) * RowsPerBand).map(i => col(s"mh$i"))).as("h"))
-      }: _*)).as("bh"): _*)
-      .select(keep :+ col("bh.band").as("band") :+ col("bh.h").as("h"): _*)
+      }: _*)).as("bh"))
+      .select(col("doc_id"), col("bh.band").as("band"), col("bh.h").as("h"))
     val shortRows = docs
       .filter(!wordsGe3(col("text")))
-      .select(keep :+ explode(array((0 until Bands).map(b => lit(b)): _*)).as("band"): _*)
-      .withColumn("h",
-        if (portable) md5(concat_ws("|", lit("short"), col("doc_id"), col("band")))
-        else xxhash64(lit("short"), col("doc_id"), col("band")))
+      .select(col("doc_id"), explode(array((0 until Bands).map(b => lit(b)): _*)).as("band"))
+      .withColumn("h", md5(concat_ws("|", lit("short"), col("doc_id"), col("band"))))
     banded.unionByName(shortRows)
-  }
-
-  /** Batch twin of EventsStreaming.lshDedupWithinWatermark: a document
-    * survives iff it is the (ts, doc_id)-first occupant of EVERY one of
-    * its band buckets — the same any-band-collision-suppresses semantics
-    * the streaming dropDuplicatesWithinWatermark composition applies
-    * (with first-arrival replaced by first-event-time, which coincide
-    * when the stream is fed in event-time order). StreamingSpec pins the
-    * two bit-for-bit on closed windows.
-    */
-  private[graft] def lshDedupKeepFirst(docs: DataFrame, portable: Boolean): DataFrame = {
-    import docs.sparkSession.implicits._
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"band", $"h")
-    bandedDocs(docs, Seq("ts"), portable)
-      .withColumn("__first", min(struct($"ts", $"doc_id")).over(w))
-      .groupBy($"doc_id", $"ts")
-      .agg(
-        count(lit(1)).as("n_bands"),
-        sum(when(struct($"ts", $"doc_id") === $"__first", 1L).otherwise(0L)).as("n_won"))
-      .filter($"n_won" === $"n_bands")
-      .select($"doc_id", $"ts")
   }
 
   /** MinHash + LSH near-dup: 16 hashes, 4 bands × 4 rows. Candidates =
@@ -449,20 +340,15 @@ object DedupOps {
     * scale the posting explode is narrow and the aggregate is
     * partial+final.
     *
-    * Two hash families, same plumbing:
-    *   - portable (registered, oracle-checked): one md5 per shingle →
-    *     31-bit base hash → 16 affine min-transforms (see P31/hashA/
-    *     hashB above), band key = md5 of the 4 row-mins — every step
-    *     integer/md5 arithmetic reproducible in any engine, so the
-    *     ENTIRE LSH pipeline hash-checks against DuckDB;
-    *   - engine (portable=false, the 100 TB path): seeded xxhash64
-    *     64-bit integers — no cryptographic hash anywhere. Same
-    *     candidate semantics; swap is one flag.
+    * Hash family: one md5 per shingle → 31-bit base hash → 16 affine
+    * min-transforms (see P31/hashA/hashB above), band key = md5 of the 4
+    * row-mins — every step integer/md5 arithmetic reproducible in any
+    * engine, so the ENTIRE LSH pipeline hash-checks against DuckDB.
     */
   def q21MinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    minhashLsh(spark, dir, portable = true)
+    minhashLsh(spark, dir)
 
-  private[graft] def minhashLsh(spark: SparkSession, dir: String, portable: Boolean): DataFrame = {
+  private[graft] def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // reused for the exact-verify sets; NOT cached — same per-invocation
     // leak rationale as jaccardPairs (recompute a narrow projection
@@ -471,15 +357,9 @@ object DedupOps {
     val post = sh.select($"doc_id", explode($"shingles").as("s"))
     // base hash projected ONCE per posting; the 16 signature lanes are
     // cheap arithmetic over it
-    val postH =
-      if (portable)
-        post.withColumn("h",
-          conv(substring(md5($"s"), 1, 8), 16, 10).cast("long") % P31)
-      else post.withColumn("h", xxhash64($"s"))
-    def rowHash(i: Int): Column =
-      if (portable) (lit(hashA(i)) * $"h" + lit(hashB(i))) % P31
-      else xxhash64(lit(i), $"s")
-    def bandHash(cols: Seq[Column]): Column = bandKey(portable)(cols)
+    val postH = post.withColumn("h",
+      conv(substring(md5($"s"), 1, 8), 16, 10).cast("long") % P31)
+    def rowHash(i: Int): Column = (lit(hashA(i)) * $"h" + lit(hashB(i))) % P31
     val mins = (0 until NumHashes).map(i => min(rowHash(i)).as(s"mh$i"))
     val sigs = postH.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
     val buckets = sigs.select(
@@ -487,7 +367,7 @@ object DedupOps {
       explode(array((0 until Bands).map { b =>
         struct(
           lit(b).as("band"),
-          bandHash((b * RowsPerBand until (b + 1) * RowsPerBand).map(i => col(s"mh$i"))).as("h"))
+          bandKey((b * RowsPerBand until (b + 1) * RowsPerBand).map(i => col(s"mh$i"))).as("h"))
       }: _*)).as("bh"))
       .select($"doc_id", $"bh.band".as("band"), $"bh.h".as("h"))
     val cand = buckets.as("a")
@@ -553,7 +433,7 @@ object DedupOps {
        |      $bandsSql)""".stripMargin
   }
 
-  /** DuckDB twin of the PORTABLE q21: the same base-hash fold, affine
+  /** DuckDB twin of q21: the same base-hash fold, affine
     * min-lanes, band keys, bucket join, and exact-Jaccard verify — the
     * full LSH pipeline is hash-checked, not just an invariant.
     */
@@ -584,33 +464,21 @@ object DedupOps {
     * all codegen'd scalar expressions (the earlier nested higher-order
     * fold interpreted 32 lambdas per token).
     *
-    * Two hash families (same vote/reassembly plumbing):
-    *   - portable (registered, oracle-checked): the 32 bits are the first
-    *     8 hex digits of md5(token) — digit j contributes bits 4j..4j+3 —
-    *     reproducible in DuckDB with substr+strpos arithmetic, so the
-    *     whole signature hash-checks;
-    *   - engine (portable=false, the 100 TB path): low 32 bits of
-    *     xxhash64(token), one cheap hash call per token.
+    * Hash family: the 32 bits are the first 8 hex digits of md5(token) —
+    * digit j contributes bits 4j..4j+3 — reproducible in DuckDB with
+    * substr+strpos arithmetic, so the whole signature hash-checks.
     */
-  def q22Simhash(spark: SparkSession, dir: String): DataFrame =
-    simhash(spark, dir, portable = true)
-
-  private[graft] def simhash(spark: SparkSession, dir: String, portable: Boolean): DataFrame = {
+  def q22Simhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val bits = 32
     val toks = Tables(spark, dir).documents
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
     // hash each token ONCE in a projection; the 32 vote lanes only do
     // shift/mask arithmetic over the projected value
-    val hashed =
-      if (portable)
-        // 32-bit token hash = first 8 hex digits of md5 (bit b lives in
-        // hex digit b/4+1 at in-digit position b%4, matching the twin)
-        toks.withColumn("h", conv(substring(md5($"tok"), 1, 8), 16, 10).cast("long"))
-      else toks.withColumn("h", xxhash64($"tok"))
-    val withBit: Int => Column =
-      if (portable) b => shiftright($"h", 4 * (8 - (b / 4 + 1)) + b % 4).bitwiseAND(1)
-      else b => shiftright($"h", b).bitwiseAND(1)
+    // 32-bit token hash = first 8 hex digits of md5 (bit b lives in hex
+    // digit b/4+1 at in-digit position b%4, matching the twin)
+    val hashed = toks.withColumn("h", conv(substring(md5($"tok"), 1, 8), 16, 10).cast("long"))
+    def withBit(b: Int): Column = shiftright($"h", 4 * (8 - (b / 4 + 1)) + b % 4).bitwiseAND(1)
     val votes = (0 until bits).map { b =>
       sum(when(withBit(b) === 1, 1L).otherwise(-1L)).as(s"v$b")
     }
@@ -622,7 +490,7 @@ object DedupOps {
       .orderBy($"doc_id")
   }
 
-  /** DuckDB twin of the PORTABLE q22: identical digit/bit/vote arithmetic. */
+  /** DuckDB twin of q22: identical digit/bit/vote arithmetic. */
   val q22Sql: String = {
     val digits = (1 to 8)
       .map(j => s"strpos('0123456789abcdef', substr(md5(tok), $j, 1)) - 1 AS d$j")
@@ -723,10 +591,9 @@ object DedupOps {
     * PAIRS, this emits the deduplicated corpus — a document survives iff
     * it is the smallest doc_id in EVERY one of its band buckets (the
     * greedy bucket-first rule; q21's any-band candidate semantics turned
-    * into a keep/drop decision). Exactly the batch semantics of the
-    * streaming lshDedupWithinWatermark with doc_id as arrival order, but
-    * over the PORTABLE hash family, so the whole decision — shingles,
-    * lanes, band keys, winner selection — hash-checks against DuckDB.
+    * into a keep/drop decision). The hash family is q21's md5/affine
+    * one, so the whole decision — shingles, lanes, band keys, winner
+    * selection — hash-checks against DuckDB.
     * One shuffle keyed by (band, bucket) plus one by doc; both bounded.
     *
     * CONTRACT — sub-3-word documents bypass dedup ENTIRELY here, even
@@ -741,7 +608,7 @@ object DedupOps {
   def q64KeepFirstDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"band", $"h")
-    bandedDocs(Tables(spark, dir).documents, carry = Nil, portable = true)
+    bandedDocs(Tables(spark, dir).documents)
       .withColumn("__first", min($"doc_id").over(w))
       .groupBy($"doc_id")
       .agg(
@@ -845,7 +712,7 @@ object DedupOps {
     // the LSH pipeline is the expensive upstream and its pair output is
     // tiny — publish it once instead of re-deriving it for the corpus-
     // wins and batch-wins branches (q89 pattern)
-    val pairs = minhashLsh(spark, dir, portable = true).select($"doc_a", $"doc_b")
+    val pairs = minhashLsh(spark, dir).select($"doc_a", $"doc_b")
       .ckpt()
     val split = docs.agg(floor(lit(0.8) * (max($"doc_id") + 1)).cast("long").as("s"))
     val p = pairs.crossJoin(broadcast(split))
@@ -1080,7 +947,7 @@ object DedupOps {
     // the LSH pipeline is the expensive upstream and its pair output is
     // tiny — publish it once instead of re-deriving it for the corpus-
     // wins and batch-wins branches (q89 pattern)
-    val pairs = minhashLsh(spark, dir, portable = true).select($"doc_a", $"doc_b")
+    val pairs = minhashLsh(spark, dir).select($"doc_a", $"doc_b")
       .ckpt()
     val verts = Tables(spark, dir).documents.select($"doc_id".as("v"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"cluster_id")
@@ -1164,7 +1031,7 @@ object DedupOps {
   def q170GroupSplit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables(spark, dir).documents
-    val pairs = minhashLsh(spark, dir, portable = true).select($"doc_a", $"doc_b")
+    val pairs = minhashLsh(spark, dir).select($"doc_a", $"doc_b")
       .ckpt()
     val labels = connectedComponents(docs.select($"doc_id".as("v")), pairs)
       .select($"v".as("doc_id"), $"label".as("cluster_id"))
@@ -1235,7 +1102,7 @@ object DedupOps {
     // the LSH pipeline is the expensive upstream and its pair output is
     // tiny — publish it once instead of re-deriving it for the corpus-
     // wins and batch-wins branches (q89 pattern)
-    val pairs = minhashLsh(spark, dir, portable = true).select($"doc_a", $"doc_b")
+    val pairs = minhashLsh(spark, dir).select($"doc_a", $"doc_b")
       .ckpt()
     val docs = Tables(spark, dir).documents
     val labels = connectedComponents(docs.select($"doc_id".as("v")), pairs)
@@ -1390,9 +1257,9 @@ object DedupOps {
     *
     * Truth = the q20 inverted-index exact-Jaccard pairs at the q21
     * verify threshold (0.5); prediction = the band-collision candidate
-    * set BEFORE verification (bandedDocs — the same row-local signature
-    * construction the streaming dedup uses, pinned bit-for-bit to q21's
-    * aggregated form by StreamingSpec/PropertySpec). Plan: both sides
+    * set BEFORE verification (bandedDocs — the row-local signature
+    * construction, pinned bit-for-bit to an independent JVM computation
+    * of q21's hash family by DedupSimilaritySpec). Plan: both sides
     * are the existing one-shuffle machines; the eval itself joins two
     * pair lists and folds three counts — output is ONE row regardless
     * of corpus size.
@@ -1415,7 +1282,7 @@ object DedupOps {
     import docs.sparkSession.implicits._
     def pub(df: DataFrame): DataFrame = if (publish) df.ckpt() else df
     val truth = pub(jaccardPairs(docs, 0.5).select($"doc_a", $"doc_b"))
-    val buckets = bandedDocs(docs, Seq.empty, portable = true)
+    val buckets = bandedDocs(docs)
     val cand = pub(buckets.as("a")
       .join(buckets.as("b"),
         $"a.band" === $"b.band" && $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
@@ -1703,7 +1570,7 @@ object DedupOps {
       explode(array((0 until Bands).map { b =>
         struct(
           lit(b).as("band"),
-          bandKey(portable = true)(
+          bandKey(
             (b * RowsPerBand until (b + 1) * RowsPerBand)
               .map(i => col(s"mh$i"))).as("h"))
       }: _*)).as("bh"))
@@ -1893,7 +1760,7 @@ object DedupOps {
       explode(array((0 until Bands).map { b =>
         struct(
           lit(b).as("band"),
-          bandKey(portable = true)(
+          bandKey(
             (b * RowsPerBand until (b + 1) * RowsPerBand)
               .map(i => col(s"mh$i"))).as("h"))
       }: _*)).as("bh"))
@@ -2774,9 +2641,7 @@ object DedupOps {
     decontamStep(ctoks, gOld, gDelta)
   }
 
-  /** One incremental-decontamination MAINTENANCE STEP, shared by batch
-    * q188 and the streaming twin
-    * ([[graft.streaming.EventsStreaming.runIncrementalDecontam]]): given
+  /** One incremental-decontamination MAINTENANCE STEP (q188): given
     * the corpus's tokenized frame, the KNOWN benchmark gram set
     * (everything already decontaminated against) and a freshly-landed
     * DELTA gram set (already anti-joined against known), emit the
@@ -2818,21 +2683,18 @@ object DedupOps {
       .orderBy($"doc_id")
   }
 
-  /** q189: the delta-touched candidate MONITOR — batch twin of the
-    * streaming surface
-    * [[graft.streaming.EventsStreaming.decontamTouched]] (r16): per
-    * corpus doc, how many times the newly-landed panel's NOVEL grams
-    * (delta panel windows minus the already-known old-panel gram set)
-    * hit it. This is the q188 candidate-discovery stage surfaced as its
-    * own observable: operations teams watch the hit counts to size an
+  /** q189: the delta-touched candidate MONITOR (r16): per corpus doc,
+    * how many times the newly-landed panel's NOVEL grams (delta panel
+    * windows minus the already-known old-panel gram set) hit it. This
+    * is the q188 candidate-discovery stage surfaced as its own
+    * observable: operations teams watch the hit counts to size an
     * incremental re-excision before running it (a benchmark landing
     * that touches 0.001% of the corpus is a no-op run; one that
     * touches 20% means the "incremental" path should be abandoned for
     * a full q182 pass).
     *
-    * OCCURRENCE semantics, matching the stream exactly: the novel side
-    * keeps one row per delta-window occurrence (the stream cannot
-    * dedup across its history), so n_hits = |delta occurrences ×
+    * OCCURRENCE semantics: the novel side keeps one row per
+    * delta-window occurrence, so n_hits = |delta occurrences ×
     * corpus occurrences| per doc. Both panel gram sets are
     * panel-sized → broadcast; the corpus contributes one window
     * derivation and the shuffle carries only the matched (doc_id)
@@ -2898,7 +2760,7 @@ object DedupOps {
     * Scale shape: one digest-keyed partial+final aggregate (min doc_id
     * per digest) re-joined on digest, then a |sources|-group rollup —
     * neither shuffle carries text. The digest is grouping-internal
-    * (never output), so the engine lane uses (xxhash64(text),
+    * (never output), so the engine keys on (xxhash64(text),
     * length(text)) — 16 bytes on the wire vs md5's 32-char string and a
     * much cheaper hash (r16 verdict order 8; the A/B is in PERF.md
     * r17). Collision honesty: a false dup needs two distinct
@@ -2907,23 +2769,19 @@ object DedupOps {
     * docs) — which perturbs an aggregate RATE report by ~1e-9 relative;
     * the exact-dedup family (q19/q64), which deletes docs rather than
     * reporting rates, keeps md5. The DuckDB twin stays md5 (DuckDB has
-    * no xxhash64) — the report's values are digest-invariant, and
-    * DedupSpec pins both lanes equal on the fixture.
+    * no xxhash64) — the report's values are digest-invariant, so the
+    * oracle compares the two digests at every fixture.
     */
   def q192DedupImpact(spark: SparkSession, dir: String): DataFrame =
     dedupImpactOf(Tables(spark, dir).documents)
 
-  private[graft] def dedupImpactOf(docs: DataFrame,
-      md5Lane: Boolean = false): DataFrame = {
+  private[graft] def dedupImpactOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val dg =
-      if (md5Lane) Seq(md5($"text").as("dg"))
-      else Seq(xxhash64($"text").as("dg"), length($"text").as("dl"))
-    val keys = if (md5Lane) Seq("dg") else Seq("dg", "dl")
-    val d = docs.select(Seq($"doc_id", $"source",
-      TextOps.wordCount($"text").as("nw")) ++ dg: _*)
-    val first = d.groupBy(keys.map(col): _*).agg(min($"doc_id").as("first_doc"))
-    d.join(first, keys)
+    val d = docs.select($"doc_id", $"source",
+      TextOps.wordCount($"text").as("nw"),
+      xxhash64($"text").as("dg"), length($"text").as("dl"))
+    val first = d.groupBy($"dg", $"dl").agg(min($"doc_id").as("first_doc"))
+    d.join(first, Seq("dg", "dl"))
       .withColumn("is_dup", $"doc_id" > $"first_doc")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
@@ -3025,7 +2883,7 @@ object DedupOps {
       "incremental decontam: delta-gram-pruned re-excision when a new benchmark lands; twin is the full recompute"),
     Q("q189_decontam_touched", q189DecontamTouched, Some(q189Sql),
       Seq("X-dedup", "X-scale"),
-      "delta-touched candidate monitor: novel-gram hit counts per corpus doc, batch twin of the streaming surface"),
+      "delta-touched candidate monitor: novel-gram hit counts per corpus doc"),
     Q("q192_dedup_impact", q192DedupImpact, Some(q192Sql),
       Seq("X-dedup", "X-scale"),
       "per-source dedup impact report: keep-first duplicate docs and token mass removed, by source"),
@@ -3069,7 +2927,7 @@ object DedupOps {
       Seq("X-dedup", "X-sample", "X-scale"),
       "group-aware k-fold split: folds keyed by near-dup cluster, leakage audit vs naive"),
     Q("q64_keepfirst_dedup", q64KeepFirstDedup, Some(q64Sql), Seq("X-dedup"),
-      "LSH keep-first dedup materialization (batch twin of the streaming path)"),
+      "LSH keep-first dedup materialization"),
     Q("q77_incremental_dedup", q77IncrementalDedup, Some(q77Sql), Seq("X-dedup"),
       "incremental near-dup dedup of a new batch against a corpus index"),
     Q("q82_prefix_dup", q82PrefixDup, Some(q82Sql), Seq("X-dedup"),

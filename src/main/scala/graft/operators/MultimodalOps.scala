@@ -87,26 +87,6 @@ object MultimodalOps {
     }.toDF("media_id", "frame_idx", "frame_bytes")
   }
 
-  /** Resize stub for image payloads: keep every `stride`-th byte and
-    * scale the metadata (a real codec re-encodes pixels; the
-    * binary-in/binary-out batch shape, metadata rewrite, and
-    * narrow/no-shuffle execution are what's exercised). Batched like
-    * decodeStub so a native resizer amortizes setup per batch.
-    */
-  def resizeStub(media: Dataset[MediaRow], stride: Int = 4): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap(_.map { m =>
-        val out = m.payload.indices.collect {
-          case i if i % stride == 0 => m.payload(i)
-        }.toArray
-        m.copy(payload = out,
-          width = math.max(1, m.width / stride),
-          height = math.max(1, m.height / stride))
-      })
-    }
-  }
-
   /** Registered frame-sampling surface: every 4th 64-byte slice of each
     * video payload. Pure byte arithmetic over the UTF-8 fixture
     * payloads, so the whole row-explosion path hash-checks against a

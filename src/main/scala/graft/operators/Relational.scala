@@ -405,11 +405,7 @@ object Relational {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  /** Streaming-shaped batch aggregate: tumbling hourly window per type
-    * (the Structured Streaming pipeline in graft.streaming runs this same
-    * logical plan incrementally; this batch twin is the oracle-checkable
-    * surface).
-    */
+  /** Tumbling hourly window aggregate per event type. */
   def q11EventsHourly(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables(spark, dir).events
@@ -1223,7 +1219,7 @@ object Relational {
     Q("q10_date_range", q10DateRange, Some(q10Sql), Seq("P7", "P8", "A2", "A3", "A4", "F4", "F5"),
       "date-range filter + weekly-trends aggregates"),
     Q("q11_events_hourly", q11EventsHourly, Some(q11Sql), Seq("A1", "F3"),
-      "tumbling hourly window aggregate (batch twin of streaming)"),
+      "tumbling hourly window aggregate"),
     Q("q12_json_extract", q12JsonExtract, Some(q12Sql), Seq("P2"),
       "JSON-path extraction from payload column"),
     Q("q31_rollup", q31Rollup, Some(q31Sql), Seq("A6"),

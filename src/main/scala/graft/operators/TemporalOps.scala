@@ -449,12 +449,10 @@ object TemporalOps {
       |WHERE cnt * 11 > total
       |ORDER BY event_type""".stripMargin
 
-  /** Batch gap-sessionization — the batch twin of the streaming
-    * flatMapGroupsWithState operator (EventsStreaming.sessionize, same
-    * 30-minute inactivity gap): a session continues while the gap to the
-    * previous event is ≤ 30 min. Composed from lag → flag → running sum
-    * (the classic sessionization rewrite): one shuffle on user, one
-    * sort — no stateful custom code needed in batch.
+  /** Batch gap-sessionization with a 30-minute inactivity gap: a
+    * session continues while the gap to the previous event is ≤ 30 min.
+    * Composed from lag → flag → running sum (the classic sessionization
+    * rewrite): one shuffle on user, one sort — no stateful custom code.
     */
   def q46Sessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -501,26 +499,13 @@ object TemporalOps {
       |GROUP BY user_id, session_idx
       |ORDER BY user_id, session_idx""".stripMargin
 
-  /** Keep-first temporal dedup: within each (key..., tumbling window)
-    * bucket, only the earliest row survives — the standard log/event
-    * dedup of an ingestion pipeline (repeated beacons, retried posts).
-    * One shuffle on (keys, bucket); per-bucket state is a row_number,
-    * so partitions stay bounded by the window width no matter how long
-    * the stream history is. The tie-break column makes the winner
-    * deterministic when two rows share the key and timestamp.
-    */
-  def dedupFirstInWindow(df: DataFrame, keys: Seq[String], tsCol: String,
-      tieBreak: String, windowSec: Long): DataFrame = {
-    val bucket = floor(unix_timestamp(col(tsCol)) / windowSec)
-    val w = Window
-      .partitionBy(keys.map(col) :+ bucket.as("__bucket"): _*)
-      .orderBy(col(tsCol), col(tieBreak))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** Registered surface: dedup clicks per (user, event_type, 5-minute
-    * bucket), reported as per-type kept/total counts. Sub-second
+  /** Keep-first temporal dedup: within each (user, event_type, 5-minute
+    * tumbling bucket) only the earliest row survives — the standard
+    * log/event dedup of an ingestion pipeline (repeated beacons, retried
+    * posts) — reported as per-type kept/total counts. One shuffle on
+    * (keys, bucket); per-bucket state is a row_number, so partitions stay
+    * bounded by the window width. The event_id tie-break makes the winner
+    * deterministic when two rows share the key and timestamp. Sub-second
     * fractions can never flip a bucket (buckets are whole-second
     * aligned and the fraction is < the 1 s gap to the next boundary),
     * so Spark's integer unix_timestamp and DuckDB's fractional epoch()
@@ -1006,10 +991,10 @@ object TemporalOps {
       |ORDER BY user_id, day_id""".stripMargin
 
   /** Hopping (sliding) window aggregate: 1-hour windows advancing every
-    * 15 minutes — the batch twin of a streaming hopping-window agg, via
-    * Spark's built-in `window(ts, "1 hour", "15 minutes")`, which expands
-    * each event into its windowLength/slide = 4 owning windows inside the
-    * projection (row-local fan-out, no join) and aggregates once.
+    * 15 minutes, via Spark's built-in `window(ts, "1 hour", "15
+    * minutes")`, which expands each event into its windowLength/slide = 4
+    * owning windows inside the projection (row-local fan-out, no join)
+    * and aggregates once.
     *
     * Scale: the shuffle payload is 4× the tumbling equivalent — the
     * fan-out factor is the knob, chosen here, not a surprise — and the
@@ -1115,9 +1100,7 @@ object TemporalOps {
     *
     * One window over (user, hour) — the q7 latest-per-key sort shape
     * with a keep-K instead of keep-1 — then a per-hour aggregate of
-    * admission flags. The streaming twin
-    * (EventsStreaming.throttle) enforces the same quota incrementally
-    * with one counter per open (user, hour) of state.
+    * admission flags.
     */
   def q112RateLimit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1167,7 +1150,7 @@ object TemporalOps {
     * o_orderkey), a FINISHED status is a delete marker, anything else
     * upserts the price. Latest-change-wins is one row_number over a
     * single custkey-keyed sort — one shuffle, partial-free, and the
-    * per-key state the streaming twin would carry is exactly the rn=1
+    * per-key state an incremental apply would carry is exactly the rn=1
     * row. Keys whose last event deletes them are filtered AFTER the
     * window (not before — an earlier upsert must not resurrect them).
     */

@@ -197,7 +197,7 @@ object TextExpressions {
 
   /** All K portable MinHash lane minima in ONE pass over the shingle
     * array — the row-local signature construction of
-    * DedupOps.bandedDocs (streaming LSH dedup, q64/q148/q174/q178).
+    * DedupOps.bandedDocs (q64/q148).
     * The HOF formulation paid one interpreted `transform` materializing
     * a base-hash array (an md5 + conv + substring lambda per shingle)
     * plus K more interpreted `array_min(transform(...))` passes per

@@ -198,31 +198,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(hammingFar > hammingNear, s"far $hammingFar vs near $hammingNear")
   }
 
-  test("prefix-filtered candidate path returns exactly the plain capped-join pairs") {
-    val docs = graft.Tables(spark, docDir).documents
-    for (t <- Seq(0.2, 0.5)) {
-      val plain = DedupOps.jaccardPairs(docs, t)
-        .as[(Long, Long, Double)].collect().toSeq
-      val prefixed = DedupOps.jaccardPairs(docs, t, prefixFilter = true)
-        .as[(Long, Long, Double)].collect().toSeq
-      assert(plain == prefixed, s"threshold $t")
-      assert(plain.nonEmpty)
-    }
-  }
-
-  test("engine-hash (xxhash64) minhash/simhash behave like the portable family") {
-    val pairs = DedupOps.minhashLsh(spark, docDir, portable = false)
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((0L, 2L)))
-    assert(pairs.contains((0L, 1L)))
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
-    val sig = DedupOps.simhash(spark, docDir, portable = false)
-      .as[(Long, Long)].collect().toMap
-    assert(sig(0L) == sig(2L))
-    assert(java.lang.Long.bitCount(sig(0L) ^ sig(1L)) <
-      java.lang.Long.bitCount(sig(0L) ^ sig(3L)))
-  }
-
   test("ANN brute force ranks the query's own cluster first") {
     val top = SimilarityOps.q24AnnBrute(spark, embDir)
       .select($"vec_id").as[Long].collect().toSeq
@@ -353,8 +328,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("row-local banded signatures match an independent JVM reference computation") {
     import spark.implicits._
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val got = DedupOps.bandedDocs(
-      Seq((7L, text)).toDF("doc_id", "text"), carry = Nil, portable = true)
+    val got = DedupOps.bandedDocs(Seq((7L, text)).toDF("doc_id", "text"))
       .select($"band", $"h").as[(Int, String)].collect().toMap
     // reference computation in plain Scala: trigram shingles → md5-folded
     // 31-bit base hash → 16 affine min-lanes → md5 band keys
@@ -1628,11 +1602,5 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(got == List(
       ("srcA", 2L, 1L, 0.5, 6L, 3L),
       ("srcB", 3L, 2L, 2.0 / 3.0, 11L, 7L)))
-    // the digest is grouping-internal: the default (xxhash64, length)
-    // engine lane and the md5 lane the DuckDB twin uses must agree
-    // row-for-row (r16 verdict order 8)
-    val md5Lane = DedupOps.dedupImpactOf(docs, md5Lane = true)
-      .as[(String, Long, Long, Double, Long, Long)].collect().toList
-    assert(md5Lane == got)
   }
 }

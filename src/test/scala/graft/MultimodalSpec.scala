@@ -126,17 +126,4 @@ class MultimodalSpec extends AnyFunSuite {
     // media 3: shorter than one frame — zero frames, NULL peaks
     assert(out(3L) == AudioSummary(3L, 0L, 0L, 0L, None, None))
   }
-
-  test("resize stub keeps every stride-th byte and rescales metadata") {
-    import MultimodalOps.MediaRow
-    val media = Seq(
-      MediaRow(1L, "image", "abcdefghij".getBytes("UTF-8"), 640, 360),
-      MediaRow(2L, "image", Array.empty[Byte], 320, 180)).toDS()
-    val out = MultimodalOps.resizeStub(media, stride = 4).collect()
-      .map(m => m.media_id -> m).toMap
-    assert(new String(out(1L).payload, "UTF-8") == "aei") // bytes 0, 4, 8
-    assert(out(1L).width == 160 && out(1L).height == 90)
-    assert(out(2L).payload.isEmpty)
-    assert(out(2L).width == 80 && out(2L).height == 45)
-  }
 }

@@ -84,9 +84,9 @@ class PropertySpec extends AnyFunSuite {
     assert(dim.select("weather_code").distinct().count() == Schemas.weatherCodeSeed.size)
   }
 
-  test("jaccardPairs: prefix-filtered path equals the plain capped join on random corpora") {
-    // random docs over a small vocabulary (forces shared shingles, dup
-    // rates, and df-cap hits); both candidate paths must agree exactly
+  test("jaccardPairs matches a model of q20's rare-shingle Jaccard on random corpora") {
+    // random docs over a small vocabulary (forces shared shingles and
+    // dup rates); shingle df here reaches 7, so a cap of 5 drops some
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
     val docGen = for {
       n <- Gen.chooseNum(3, 24)
@@ -96,15 +96,33 @@ class PropertySpec extends AnyFunSuite {
     val docs = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    // 0.28 / 0.14 exercise the ceil-over-double hazard (n*t landing just
-    // above an integer, e.g. 25*0.28 = 7.000000000000001)
+    // model of q20Sql: distinct word trigrams per doc of >= 3 words;
+    // intersections count only shingles in <= dfCap docs, denominators
+    // use the full distinct-set sizes; the threshold is inclusive
+    val dfCap = 5
+    val sets = texts.zipWithIndex.collect {
+      case (t, i) if t.split(" ").length >= 3 =>
+        i.toLong -> t.split(" ").sliding(3).map(_.mkString(" ")).toSet
+    }.toMap
+    val df = sets.values.toSeq.flatten.groupBy(identity).view.mapValues(_.size).toMap
+    val rare = sets.map { case (d, sh) => d -> sh.filter(df(_) <= dfCap) }
+    val ids = sets.keys.toSeq.sorted
+    val jaccard = for {
+      a <- ids; b <- ids if a < b
+      inter = (rare(a) & rare(b)).size if inter > 0
+    } yield (a, b, inter.toDouble / (sets(a).size + sets(b).size - inter))
     for (t <- Seq(0.14, 0.28, 0.3, 0.6, 0.9)) {
-      val plain = graft.operators.DedupOps.jaccardPairs(docs, t, dfCap = 10)
+      val got = graft.operators.DedupOps.jaccardPairs(docs, t, dfCap = dfCap)
         .as[(Long, Long, Double)].collect().toSeq
-      val pref = graft.operators.DedupOps.jaccardPairs(docs, t, dfCap = 10, prefixFilter = true)
-        .as[(Long, Long, Double)].collect().toSeq
-      assert(plain == pref, s"threshold $t")
+      val want = jaccard.filter(_._3 >= t)
+      assert(got == want, s"threshold $t")
+      assert(want.nonEmpty, s"threshold $t selects no pair")
     }
+    // the threshold is inclusive: cut exactly at an attained value
+    val tie = jaccard.map(_._3).min
+    val atTie = graft.operators.DedupOps.jaccardPairs(docs, tie, dfCap = dfCap)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(atTie == jaccard && atTie.exists(_._3 == tie))
   }
 
   test("asofJoin matches a brute-force model on random event streams") {
@@ -257,22 +275,6 @@ class PropertySpec extends AnyFunSuite {
       assert(s >= 0 && s < 8)
       assert(rs.map(_._3).sorted == (1L to rs.size).toList)
     }
-  }
-
-  test("dedupFirstInWindow matches the per-(key,bucket) earliest-row model") {
-    val rowGen = for {
-      user <- Gen.chooseNum(1L, 4L)
-      sec <- Gen.chooseNum(0L, 2000L)
-    } yield (user, sec)
-    val rows = sample(rowGen, 400, seed = 47L).zipWithIndex
-      .map { case ((u, s), i) => (i.toLong, u, new java.sql.Timestamp(s * 1000)) }
-    val kept = operators.TemporalOps.dedupFirstInWindow(
-        rows.toDF("event_id", "user_id", "ts"),
-        Seq("user_id"), "ts", "event_id", windowSec = 300)
-      .select($"event_id").as[Long].collect().toSet
-    val want = rows.groupBy(r => (r._2, r._3.getTime / 1000 / 300)).values
-      .map(g => g.minBy(r => (r._3.getTime, r._1))._1).toSet
-    assert(kept == want)
   }
 
   test("interval merge matches a brute-force sweep model on random interval sets") {

@@ -83,22 +83,25 @@ class TemporalSpec extends AnyFunSuite {
     assert(rows.groupBy("event_id").count().filter($"count" > 1).isEmpty)
   }
 
-  test("dedupFirstInWindow keeps the earliest row per key and bucket, ties by id") {
-    // 300 s buckets: [0,300) and [300,600). user 1 has three rows in the
-    // first bucket (two tied at t=10) and one in the second; user 2 is
-    // untouched in its own bucket.
-    def sec(s: Long) = new java.sql.Timestamp(s * 1000)
-    val df = Seq(
-      (5L, 1L, sec(10)),  // tie at t=10 → lower event_id wins
-      (4L, 1L, sec(10)),
-      (6L, 1L, sec(299)), // same bucket → dropped
-      (7L, 1L, sec(300)), // next bucket boundary → kept
-      (8L, 2L, sec(10))   // other key → kept
-    ).toDF("event_id", "user_id", "ts")
-    val kept = TemporalOps.dedupFirstInWindow(
-        df, Seq("user_id"), "ts", "event_id", 300)
-      .select($"event_id").as[Long].collect().toSet
-    assert(kept == Set(4L, 7L, 8L))
+  test("q52 keeps the earliest event per user, type and 5-minute bucket") {
+    // 300 s buckets: [0,300) and [300,600). user 1 has three clicks in
+    // the first bucket (two tied at t=10) and one in the second; user 2's
+    // click and user 1's view each sit alone in their own bucket.
+    val dir = TestSpark.scratch("q52-events")
+    def ns(s: Long): Long = s * 1000000000L
+    Seq(
+      (5L, 1L, ns(10), "click"),  // tie at t=10 → one of 4/5 kept
+      (4L, 1L, ns(10), "click"),
+      (6L, 1L, ns(299), "click"), // same bucket → dropped
+      (7L, 1L, ns(300), "click"), // next bucket boundary → kept
+      (8L, 2L, ns(10), "click"),  // other user → kept
+      (9L, 1L, ns(20), "view"))   // other type → kept
+      .toDF("event_id", "user_id", "ts", "event_type")
+      .withColumn("value", lit(0.0)).withColumn("props", lit("{}"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val out = TemporalOps.q52TemporalDedup(spark, dir)
+      .as[(String, Long, Long, Double)].collect().toList
+    assert(out === List(("click", 5L, 3L, 3.0 / 5), ("view", 1L, 1L, 1.0)))
   }
 
   test("funnel requires strictly increasing first-touch times per step") {
